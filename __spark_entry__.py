@@ -202,8 +202,15 @@ def _q_coeff_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_abs_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A16 column slice + B8 scalar op + A19 dabs, exploded to scalars."""
-    d = lineitem_drm(spark, sf_dir, parallel=True).slice_cols(1, 4).scalar_op("-", 1.0).abs()
+    """A16 column slice + B8 scalar op + A19 dabs, exploded to scalars.
+    The scan is widened first: the per-row slice and explode run
+    pipelined on it."""
+    from mahout_samsara_book_spark.partitioning import ensure_min_partitions
+    from mahout_samsara_book_spark.sources.tables import lineitem_key
+
+    li = ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
+    d = Drm.from_columns(li, lineitem_key(), LINEITEM_FEATURES)
+    d = d.slice_cols(1, 4).scalar_op("-", 1.0).abs()
     return d.df.select(
         "row_id", F.posexplode("features").alias("pos", "v")
     ).select("row_id", F.col("pos").cast("long").alias("pos"), sci(F.col("v")).alias("v"))
@@ -251,7 +258,7 @@ def _q_mmul(spark: SparkSession, sf_dir: str) -> DataFrame:
     matmul, zero shuffle). Row keys preserved, duplicates included."""
     import numpy as np
 
-    a = lineitem_drm(spark, sf_dir, parallel=True)
+    a = lineitem_drm(spark, sf_dir)
     b = Drm.from_numpy(spark, np.array(_MMUL_B))
     out = a.mmul(b)
     return out.df.select(
@@ -330,7 +337,7 @@ def _q_point_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_sample_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A17 drmSampleKRows: deterministic seeded top-k over the portable
     md5 hash — the DuckDB oracle replays the identical ordering."""
-    block = lineitem_drm(spark, sf_dir, parallel=True).sample_k_rows(10, seed=42)
+    block = lineitem_drm(spark, sf_dir).sample_k_rows(10, seed=42)
     rows = [tuple(float(x) for x in r) for r in block]
     return spark.createDataFrame(rows, "f0 double, f1 double, f2 double, f3 double")
 
@@ -521,7 +528,7 @@ def _q_map_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     arbitrary numpy; the oracle replays the per-row semantics in SQL."""
     import numpy as np
 
-    d = lineitem_drm(spark, sf_dir, parallel=True)
+    d = lineitem_drm(spark, sf_dir)
 
     def center_rows(keys, block):
         return keys, block - block.mean(axis=1, keepdims=True)
@@ -615,17 +622,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # rank-carrying IVF pass, the LLR orientation explode, the
     # InheritableThread bucketed write; (2) the coverage-gap rows
     # VERDICT r12 named (touched in r12, not in its sample); (3) the
-    # 29 alphabetically-first rows of the r8-stale cohort (max graded
+    # 25 alphabetically-first rows of the r8-stale cohort (max graded
     # round per name computed from CORRECTNESS_r*.json — 38 rows were
-    # last graded in r8; the remaining 7, sketch_sample_quantiles
-    # through text_zipf_tail, defer to the next window, all with 3+
+    # last graded in r8, two of them sit in group (1); the remaining
+    # 11, sketch_cms through sketch_kmv_intersect (displaced by the four
+    # drm_* rows of group (1)) and sketch_sample_quantiles through
+    # text_zipf_tail, defer to the next window, all with 3+
     # green grades and code untouched since r8 except text_bpe_* /
     # text_inverted_index which were examined-not-changed this round).
     rotation_r13 = [
-        # -- (1) implementation changed in round 13 (both sessions:
-        # session 2 added the scan-parallelism floor to the four drm_*
-        # rows below — they displace four sketch_* rows from group (3),
-        # each already holding 3+ green grades, to the next window)
+        # -- (1) implementation changed in round 13
         "dedup_ingest_lifecycle", "ev_stream_ingest",
         "dedup_incremental_persisted", "dedup_incremental_append",
         "dedup_compact_probe", "dedup_incremental",
@@ -636,7 +642,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "drm_abs_slice", "drm_mmul", "drm_map_block", "drm_sample_k",
         # -- (2) VERDICT r12 item 6 coverage-gap rows
         "ev_stream_asof_wm", "docs_pipeline", "sel_canonical",
-        # -- (3) 29 stalest r8 rows (alphabetical prefix)
+        # -- (3) 25 stalest r8 rows (alphabetical prefix)
         "rel_forecast_revenue", "rel_fuzzy_join", "rel_heavy_shippers",
         "rel_histogram", "rel_idle_customers", "rel_local_volume",
         "rel_market_share", "rel_order_priority", "rel_promo_share",

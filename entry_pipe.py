@@ -1714,8 +1714,9 @@ def q_rel_table_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     Row identity = the integer key tuple, so the checksum is
     float-format-free and engine-portable by construction."""
     from mahout_samsara_book_spark.operators.hashing import h60
+    from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
-    li = load_table(spark, sf_dir, "lineitem", parallel=True)
+    li = ensure_min_partitions(load_table(spark, sf_dir, "lineitem"))
     rowkey = F.concat_ws(
         ":",
         F.col("l_orderkey").cast("string"),

@@ -216,20 +216,7 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Band the k = bands·rows signature, bucket on (band, band-sig),
     emit unordered candidate pairs (a < b) from same-bucket docs."""
-    band_sigs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.concat_ws(
-                    "_", *[F.col(f"mh_{bi * rows + r}") for r in range(rows)]
-                ).alias("sig"),
-            )
-            for bi in range(bands)
-        ]
-    )
-    buckets = signatures.select(
-        F.col(id_col), F.explode(band_sigs).alias("bs")
-    ).select(id_col, F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+    buckets = band_buckets(signatures, bands, rows, id_col)
     left = buckets.alias("l")
     right = buckets.alias("r")
     return (
@@ -726,8 +713,8 @@ def band_buckets(
     signatures: DataFrame, bands: int, rows: int, id_col: str = "doc_id"
 ) -> DataFrame:
     """``(id, band, sig)`` — the banded LSH bucket keys of each doc's
-    MinHash signature (the reusable half of :func:`lsh_candidate_pairs`,
-    exposed for cross-relation joins like incremental dedup)."""
+    MinHash signature: :func:`lsh_candidate_pairs` self-joins them, and
+    cross-relation joins like incremental dedup join two of them."""
     band_sigs = F.array(
         *[
             F.struct(

@@ -1,152 +1,88 @@
-"""Scan-parallelism guard shared across operators.
+"""Scan-width guard shared across operators.
 
-A whole fixture table fits ONE ``maxPartitionBytes`` split, and parquet
-row groups are the splitting floor — so a small file arrives as a
+A whole fixture table fits one ``maxPartitionBytes`` split, and a
+parquet row group is the smallest split, so a small file arrives as a
 single scan partition and every narrow stage Catalyst pipelines onto it
 (tokenize/explode, quantize, candidate generation) runs on one core
-regardless of cluster size. ``ensure_min_partitions`` widens such
-inputs to the session's default parallelism; on any real-scale table
-(more splits than cores) it is a structural no-op, so the guard costs
-nothing at 100 TB while keeping small-corpus throughput scan-parallel.
+whatever the cluster size.  :func:`ensure_min_partitions` is the one
+rule that widens such inputs.  It reads the input's width from the
+physical plan Spark has already built, without running any of it, and
+adds a ``repartition`` only when that width is below the target.
+
+A shuffle-fed input is already wide: its first exchange declares
+``spark.sql.shuffle.partitions`` partitions (or the count an explicit
+``repartition`` asked for), and AQE narrows that at run time only when
+the shuffled data is too small to need the cores.  A real-scale scan
+(more splits than cores) is wide too, so on such inputs the guard adds
+no shuffle.
 """
 
 from __future__ import annotations
 
+import sys
+
 from pyspark.sql import DataFrame
 
-_SIZE_SUFFIX = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
+def _planned_width(node) -> int:
+    """Partition count of the streamed side of physical plan ``node``.
 
-def _parse_bytes(s: str) -> int:
-    """Parse Spark size strings: '134217728', '8m', '128MB'."""
-    s = s.strip().lower().removesuffix("b")
-    if s and s[-1] in _SIZE_SUFFIX:
-        return int(float(s[:-1]) * _SIZE_SUFFIX[s[-1]])
-    return int(s)
-
-
-def _trusted_leaf_estimate(jplan) -> int:
-    """Largest ``sizeInBytes`` over the leaves whose estimate the widen
-    guard can TRUST, i.e. excluding (round-8, ADVICE):
-
-    - leaves under the broadcast-hinted side of a join — the build side
-      never streams, so its size says nothing about scan parallelism of
-      the streamed stage;
-    - partition-prunable scans that sit under an ANCESTOR Filter
-      referencing one of their partition columns — the logical leaf
-      stat is the FULL table size, but physical planning may prune the
-      scan to a sliver (partition pruning happens after the logical
-      stats are struck).
-
-    Round-9 (ADVICE r8): the filter-reference check is scoped to the
-    leaf's own ancestor path, not a plan-global set — a Filter on a
-    same-named column of an UNRELATED table (the other side of a join)
-    no longer distrusts this leaf, which previously forced the exact
-    ``df.rdd`` probe on plans the stats short-circuit handles.
-
-    Untrusted leaves simply don't contribute; when nothing trustworthy
-    is large, the caller falls through to the exact probe.
-    """
-    best = 0
-    # single walk carrying (node, under-broadcast?, ancestor Filter refs
-    # on the path root→node); refs accumulate only while DESCENDING, so
-    # each leaf sees exactly the Filters that sit above it
-    stack = [(jplan, False, frozenset())]
-    while stack:
-        node, under_bc, path_refs = stack.pop()
-        name = node.getClass().getSimpleName()
-        if name == "Filter":
-            refs = node.condition().references().toSeq()
-            path_refs = path_refs | {
-                refs.apply(i).name() for i in range(refs.size())
-            }
-        ch = node.children()
-        if ch.isEmpty():
-            if under_bc:
-                continue
-            part_cols: set[str] = set()
-            if name == "LogicalRelation":
-                try:
-                    part_cols = set(
-                        node.relation().partitionSchema().fieldNames()
-                    )
-                except Exception:  # noqa: BLE001 — non-file relation
-                    part_cols = set()
-            if part_cols & path_refs:
-                continue  # prunable under a partition filter: distrust
-            best = max(best, int(node.stats().sizeInBytes()))
-            continue
-        if name == "Join":
-            h = node.hint()
-            lbc = "broadcast" in h.leftHint().toString().lower()
-            rbc = "broadcast" in h.rightHint().toString().lower()
-            stack.append((node.left(), under_bc or lbc, path_refs))
-            stack.append((node.right(), under_bc or rbc, path_refs))
-        else:
-            for i in range(ch.size()):
-                stack.append((ch.apply(i), under_bc, path_refs))
-    return best
+    The walk descends the streamed side and stops at the first node
+    that declares its partitioning: a shuffle exchange (its declared
+    count), an operator above one, a bucketed scan, a limit (one
+    partition).  Broadcast build sides never stream and count as 0.
+    Below AQE the walk reads the initial plan, the one with the
+    exchanges ``EnsureRequirements`` added, because AQE itself reports
+    ``UnknownPartitioning(0)`` until it has run.  A leaf that
+    declares nothing reports the partitions of the RDD it plans: for
+    a file scan that is ``inputRDD``, which already applies static
+    partition pruning; a scan awaiting dynamic partition pruning
+    counts as wide.  Nothing here launches a Spark job."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _planned_width(node.initialPlan())
+    if name == "BroadcastExchangeExec":
+        return 0
+    if name == "InMemoryTableScanExec":
+        return _planned_width(node.relation().cachedPlan())
+    declared = node.outputPartitioning().numPartitions()
+    if declared > 0:
+        return declared
+    if name == "FileSourceScanExec":
+        if "dynamicpruning" in node.partitionFilters().toString():
+            # the pruned width is known only once the pruning subquery
+            # has run, and a table worth pruning at run time is wide
+            return sys.maxsize
+        return node.inputRDD().getNumPartitions()
+    kids = node.children()
+    if kids.isEmpty():
+        return node.execute().getNumPartitions()
+    widths = [_planned_width(kids.apply(i)) for i in range(kids.size())]
+    return sum(widths) if name == "UnionExec" else max(widths)
 
 
 def ensure_min_partitions(df: DataFrame, target: int | None = None) -> DataFrame:
-    """Small-file inputs arrive as one or two scan partitions (a whole
-    fixture table fits one ``maxPartitionBytes`` split), and every stage
-    Catalyst pipelines onto that scan — candidate self-joins, explode +
-    partial aggregation — then runs on ONE core regardless of cluster
-    size. Repartition up to the session's default parallelism when the
-    plan is below it; when the scan is already wide (any real-scale
-    table) this is a no-op, so no gratuitous shuffle at 100 TB.
+    """``df.repartition(target)`` when ``df``'s planned width is below
+    ``target`` (default: the session's default parallelism), else
+    ``df`` itself.
 
-    Probe cost (round-6): the exact probe (``df.rdd.getNumPartitions``)
-    forces physical planning + RDD translation on the driver, which at
-    real scale is pure waste — the answer is always "already wide". So
-    Catalyst's *logical* size estimate short-circuits first, and since
-    round 7 the estimate is the LARGEST LEAF's ``sizeInBytes``, not the
-    full plan's: without column stats Catalyst sizes a join as the
-    product of its children, so a genuinely narrow post-join plan can
-    carry a huge full-plan estimate (a silent skip of the widen). A
-    leaf, by contrast, is a scan whose stats are real file bytes — if
-    one leaf alone spans ≥ target ``maxPartitionBytes`` splits, the
-    streamed side of any join stack on top of it is at least that wide
-    (shuffled stages get ``shuffle.partitions`` anyway), and the guard
-    returns without ever building a physical plan. Round-8: only
-    TRUSTED leaves count — broadcast-hinted join sides and
-    partition-prunable scans under partition filters are excluded (see
-    :func:`_trusted_leaf_estimate`), so a pruned-to-a-sliver scan or a
-    big broadcast build side can no longer silently defeat the widen. Only plausibly-small
-    inputs (fixtures, post-filter slivers, in-memory ranges whose stats
-    underestimate their partitioning) fall through to the exact probe —
-    measured at ~1-3 ms warm on such plans (SCALING.md round-6 note).
-    Streaming DataFrames pass through untouched: ``.rdd`` raises on
-    them and micro-batch sources manage their own parallelism.
+    The width is read from ``df``'s physical plan by
+    :func:`_planned_width` and costs driver-side planning only: no
+    Spark job runs, so upstream shuffles and broadcasts execute once,
+    inside the caller's own query.  A shuffle-fed input is judged by
+    its exchange's declared count, ``spark.sql.shuffle.partitions``
+    (the core count in :func:`session.get_spark`, 200 by default in
+    Spark); the count AQE coalesces it to at run time is not
+    consulted, because AQE coalesces only shuffles too small to need
+    the cores.  A real-scale scan has more splits than cores.  So in
+    practice the guard widens only narrow scans, explicit narrow
+    repartitions and small in-memory relations.  Streaming DataFrames
+    pass through untouched: micro-batch sources manage their own
+    parallelism.
     """
     if df.isStreaming:
         return df
-    spark = df.sparkSession
-    target = target or spark.sparkContext.defaultParallelism
-    try:
-        plan = df._jdf.queryExecution().optimizedPlan()
-        max_split = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        # two-stage: the UNFILTERED max-leaf check is one py4j call and
-        # decides the common cases — below threshold means we fall to
-        # the exact probe regardless of trust, so the (py4j-per-node)
-        # trust walk only runs when it can actually change the outcome,
-        # i.e. when a naive read would SKIP the widen
-        leaves = plan.collectLeaves()
-        naive = max(
-            (
-                int(leaves.apply(i).stats().sizeInBytes())
-                for i in range(leaves.size())
-            ),
-            default=0,
-        )
-        if naive >= target * max_split:
-            if _trusted_leaf_estimate(plan) >= target * max_split:
-                return df
-    except Exception:  # noqa: BLE001 — stats are advisory; fall through
-        pass
-    if df.rdd.getNumPartitions() < target:
+    target = target or df.sparkSession.sparkContext.defaultParallelism
+    if _planned_width(df._jdf.queryExecution().executedPlan()) < target:
         return df.repartition(target)
     return df

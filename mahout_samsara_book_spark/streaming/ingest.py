@@ -30,10 +30,6 @@ from mahout_samsara_book_spark.operators.dedup import ingest_batch
 
 DOCS_SCHEMA = "doc_id long, text string"
 
-# A/B gate for the staged-file prebuild (round-13); shipping value
-# decided by interleaved measurement — see OPTIMIZATION_r13.md
-PREBUILD = True
-
 
 def run_stream_ingest(
     spark,
@@ -73,41 +69,6 @@ def run_stream_ingest(
         .parquet(batches_dir)
     )
 
-    # PREBUILD each staged file's fused shingle/signature relations
-    # concurrently before the stream starts (round-13, guide §2.6 —
-    # the lifecycle row's same overlap): the build depends only on the
-    # file's text, never on the index, so it is legal to run ahead of
-    # the strictly-sequential index transaction; the builds overlap
-    # stream initialization and each other.  Keyed by file BASENAME
-    # and looked up through ``bdf.inputFiles()`` inside the sink, so a
-    # batch that is not exactly one known staged file just builds
-    # inline — the mapping is verified per epoch, never assumed.
-    import glob as _glob
-    import os as _os
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    from mahout_samsara_book_spark.operators.dedup import (
-        _shingle_sig_fused,
-    )
-
-    _staged = (
-        sorted(
-            _glob.glob(batches_dir + "/*.parquet"),
-            key=_os.path.getmtime,
-        )
-        if PREBUILD
-        else []
-    )
-    _pool = _TPE(max_workers=min(4, max(1, len(_staged))))
-    _prebuilds = {
-        _os.path.basename(f): _pool.submit(
-            _shingle_sig_fused,
-            spark.read.parquet(f).select("doc_id", "text"),
-            n, k, seed, "doc_id", "text", materialize=True,
-        )
-        for f in _staged
-    }
-
     def sink(bdf: DataFrame, epoch_id: int) -> None:
         import os
 
@@ -143,13 +104,11 @@ def run_stream_ingest(
         # `materialize` hook, overlapping it with the index append
         # (guide §2.6) — safe in every interleaving because the append
         # is invisible behind the manifest and the probe anti-joins
-        # its own batch ids; epochs stay sequential (foreachBatch)
-        kw = {}
-        in_files = bdf.inputFiles()
-        if len(in_files) == 1:
-            fut = _prebuilds.get(os.path.basename(in_files[0]))
-            if fut is not None:
-                kw["_sh"], kw["_sig"] = fut.result()
+        # its own batch ids; epochs stay sequential (foreachBatch).
+        # The batch is shingled here, not ahead of the stream: the sink
+        # receives it as an RDD-backed relation whose inputFiles() is
+        # empty, so nothing prebuilt per staged file can be matched to
+        # its epoch.
         ingest_batch(
             bdf.select("doc_id", "text"), index_path,
             n=n, k=k, bands=bands, seed=seed, threshold=threshold,
@@ -157,7 +116,6 @@ def run_stream_ingest(
             materialize=lambda df: df.write.mode("overwrite").parquet(
                 dst
             ),
-            **kw,
         )
 
     q = (
@@ -170,5 +128,4 @@ def run_stream_ingest(
     finally:
         if q.isActive:  # pragma: no cover — availableNow self-terminates
             q.stop()
-        _pool.shutdown(wait=False)
     return spark.read.parquet(out_path)

@@ -424,6 +424,49 @@ def test_stream_ingest_matches_sequential_ingest(spark, tmp_path):
     assert sh_after == sh_before, "replay re-appended a committed epoch"
 
 
+def test_stream_ingest_widens_narrow_staged_ids(spark, tmp_path):
+    """A staged batch file whose ``doc_id`` is a 32-bit int is read
+    under the stream's declared schema, so the index append writes
+    bigint ids, as the index contract requires."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mahout_samsara_book_spark.operators.dedup import (
+        dedup_index_persist,
+    )
+    from mahout_samsara_book_spark.streaming.ingest import run_stream_ingest
+
+    corpus = spark.createDataFrame(
+        [(1, "some existing corpus content entirely distinct here")],
+        "doc_id long, text string",
+    )
+    batches = tmp_path / "batches"
+    batches.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([100, 101], pa.int32()),
+                "text": [
+                    "some existing corpus content entirely distinct here",
+                    "a fresh staged document about narrow id types",
+                ],
+            }
+        ),
+        str(batches / "b00.parquet"),
+    )
+    idx = str(tmp_path / "idx")
+    dedup_index_persist(corpus, idx)
+    out = run_stream_ingest(spark, str(batches), idx, str(tmp_path / "out"))
+    assert sorted(r["doc_id"] for r in out.collect()) == [100, 101]
+    appended = glob.glob(f"{idx}/**/batch_id=epoch-0/*.parquet", recursive=True)
+    assert any("/buckets/" in f for f in appended)
+    assert any("/shingles/" in f for f in appended)
+    for f in appended:
+        assert pq.read_schema(f).field("doc_id").type == pa.int64(), f
+
+
 def test_index_compact_preserves_probes_and_collects_garbage(
     spark, tmp_path
 ):

@@ -1,6 +1,8 @@
 """LLM-data-pipeline operators: dedup family, similarity search, text
 analysis, multimodal plumbing."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -297,40 +299,80 @@ def test_multimodal_real_codec_raises(spark, dup_docs):
         decode_features(png).collect()
 
 
-def test_ensure_min_partitions_contract(spark):
+def _jobs_so_far(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # the status store is fed async
+    return sc.statusStore().jobsList(None).size()
+
+
+def test_ensure_min_partitions_contract(spark, tmp_path):
+    """The width guard reads the planned width and launches no Spark
+    job, even on inputs whose upstream shuffles and broadcasts would
+    have to run to report their partition count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from mahout_samsara_book_spark.operators.similarity import (
         ensure_min_partitions,
     )
 
+    par = spark.sparkContext.defaultParallelism
+    big, small = spark.range(1000).toDF("k"), spark.range(10).toDF("k")
     narrow = spark.range(1000).repartition(2)
+    wide = spark.range(1000).repartition(par + 8)
+    one_rg = str(tmp_path / "one_rg.parquet")
+    many_rg = str(tmp_path / "many_rg.parquet")
+    tbl = pa.table({"k": list(range(50_000)), "v": [1.0] * 50_000})
+    pq.write_table(tbl, one_rg)
+    pq.write_table(tbl, many_rg, row_group_size=50_000 // (2 * par))
+    scan_one = spark.read.parquet(one_rg)
+    scan_many = spark.read.parquet(many_rg)
+    before = _jobs_so_far(spark)
+    for df in (
+        spark.range(1000).repartition(4, "id"),
+        spark.range(1000).groupBy((F.col("id") % 7).alias("g")).count(),
+        big.join(F.broadcast(small), "k"),
+    ):
+        ensure_min_partitions(df)
     widened = ensure_min_partitions(narrow)
-    assert widened.rdd.getNumPartitions() == (
-        spark.sparkContext.defaultParallelism
-    )
-    # already-wide input passes through untouched (no added shuffle at
+    widened_scan = ensure_min_partitions(scan_one)
+    # already-wide inputs pass through untouched (no added shuffle at
     # scale): same plan object back
-    wide = spark.range(1000).repartition(
-        spark.sparkContext.defaultParallelism + 8
-    )
     assert ensure_min_partitions(wide) is wide
-
-
-def test_trusted_leaf_estimate_pruning_and_broadcast(spark, tmp_path):
-    """The widen guard's logical-stats short-circuit must DISTRUST
-    (round-8, ADVICE): a partition-prunable scan under a partition
-    filter (the leaf stat is full-table bytes but the physical scan may
-    be a sliver) and any leaf on the broadcast-hinted side of a join
-    (the build side never streams)."""
-    from pyspark.sql import functions as F
-
-    from mahout_samsara_book_spark.partitioning import (
-        _trusted_leaf_estimate,
+    # split the multi-row-group file into at least `par` byte ranges,
+    # each holding a row group
+    old = {
+        k: spark.conf.get(k)
+        for k in (
+            "spark.sql.files.maxPartitionBytes",
+            "spark.sql.files.openCostInBytes",
+        )
+    }
+    spark.conf.set(
+        "spark.sql.files.maxPartitionBytes",
+        str(os.path.getsize(many_rg) // (2 * par)),
+    )
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try:
+        assert ensure_min_partitions(scan_many) is scan_many
+        assert _jobs_so_far(spark) == before
+        assert scan_many.rdd.getNumPartitions() >= par
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert scan_one.rdd.getNumPartitions() == 1
+    assert widened.rdd.getNumPartitions() == par
+    assert widened_scan.rdd.getNumPartitions() == par
+    assert sorted(r["k"] for r in widened_scan.collect()) == list(
+        range(50_000)
     )
 
-    def est(df):
-        return _trusted_leaf_estimate(
-            df._jdf.queryExecution().optimizedPlan()
-        )
+
+def test_ensure_min_partitions_pruned_and_broadcast_widths(spark, tmp_path):
+    """The guard judges the width of what actually streams: a
+    partition-pruned scan by its pruned splits (not the full table),
+    and a join by its streamed side (never a broadcast build side)."""
+    from mahout_samsara_book_spark.partitioning import ensure_min_partitions
 
     pt_path = str(tmp_path / "pt")
     (
@@ -340,23 +382,17 @@ def test_trusted_leaf_estimate_pruning_and_broadcast(spark, tmp_path):
         .parquet(pt_path)
     )
     pt = spark.read.parquet(pt_path)
-    full = est(pt)
-    assert full > 0
-    # partition-column filter → leaf untrusted → 0 (falls to exact probe)
-    assert est(pt.filter(F.col("p") == 3)) == 0
-    # non-partition filter → leaf stays trusted
-    assert est(pt.filter(F.col("id") > 5)) == full
-
-    big, small = spark.range(1000).toDF("k"), spark.range(10).toDF("k")
-    # broadcast-hinted BIG side must not count; the streamed small side does
-    assert est(F.broadcast(big).join(small, "k")) < est(
-        big.join(F.broadcast(small), "k")
-    )
-
-    # round-9 (ADVICE r8): filter refs are scoped to the leaf's own
-    # ancestor path — a filter on a SAME-NAMED data column of an
-    # unrelated joined table must NOT distrust this leaf (previously a
-    # plan-global ref set forced the exact probe on such plans)
+    pruned = pt.filter(F.col("p") == 3)
+    # a target between the pruned and the full split counts
+    target = pruned.rdd.getNumPartitions() + 1
+    assert pt.rdd.getNumPartitions() >= target
+    assert ensure_min_partitions(pt, target) is pt
+    assert ensure_min_partitions(pruned, target) is not pruned
+    # a non-partition filter prunes no file
+    by_id = pt.filter(F.col("id") > 5)
+    assert ensure_min_partitions(by_id, target) is by_id
+    # a partition filter on an unrelated joined table does not narrow
+    # this scan
     ot_path = str(tmp_path / "ot")
     (
         spark.range(0, 100)
@@ -367,4 +403,25 @@ def test_trusted_leaf_estimate_pruning_and_broadcast(spark, tmp_path):
         .write.parquet(ot_path)
     )
     ot = spark.read.parquet(ot_path).filter(F.col("p") == 3)
-    assert est(pt.join(ot, pt["id"] == ot["k2"])) == full
+    joined = pt.join(F.broadcast(ot), pt["id"] == ot["k2"])
+    assert ensure_min_partitions(joined, target) is joined
+    # a scan awaiting dynamic partition pruning is judged wide rather
+    # than sized by running the pruning subquery
+    dim = spark.read.parquet(ot_path).filter(F.col("k2") < 5)
+    dpp = pt.join(dim, "p")
+    assert "dynamicpruning" in (
+        dpp._jdf.queryExecution().executedPlan().toString()
+    )
+    before = _jobs_so_far(spark)
+    assert ensure_min_partitions(dpp, target) is dpp
+    assert _jobs_so_far(spark) == before
+
+    par = spark.sparkContext.defaultParallelism
+    big = spark.range(0, 1000, 1, par + 8).toDF("k")
+    small = spark.range(0, 10, 1, 1).toDF("k")
+    # the broadcast-hinted BIG side never streams: the narrow side
+    # decides, and the join is widened
+    streamed_small = F.broadcast(big).join(small, "k")
+    assert ensure_min_partitions(streamed_small) is not streamed_small
+    streamed_big = big.join(F.broadcast(small), "k")
+    assert ensure_min_partitions(streamed_big) is streamed_big

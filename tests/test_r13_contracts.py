@@ -90,57 +90,3 @@ def test_lsls_summary_probe_converges(spark):
         for r in connected_components_lsls(pairs).collect()
     }
     assert out == {(i, 0) for i in range(41)} | {(100, 100)}
-
-
-def test_scan_parallelism_floor(spark, tmp_path):
-    """_scan_parallelism_floor (guide §2.5 'unsplittable input'): a
-    single-row-group parquet file above the size floor gets a
-    round-robin repartition to defaultParallelism; a multi-row-group
-    layout at or above the parallelism, a tiny file, and a
-    non-stat-able path are all left alone — and the rows are identical
-    either way."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from mahout_samsara_book_spark.sources import tables
-
-    p = str(tmp_path / "one_rg.parquet")
-    tbl = pa.table({"k": list(range(50_000)), "v": [1.0] * 50_000})
-    pq.write_table(tbl, p)  # one row group
-    assert tables._row_group_count(p)[0] == 1
-
-    df = spark.read.parquet(p)
-    par = spark.sparkContext.defaultParallelism
-    old_floor = tables.PAR_FLOOR_MIN_BYTES
-    try:
-        tables.PAR_FLOOR_MIN_BYTES = 1
-        out = tables._scan_parallelism_floor(spark, df, p)
-        assert "Repartition" in out._jdf.queryExecution().logical().toString()
-        assert out.rdd.getNumPartitions() == par
-        # identical rows, order aside
-        assert sorted(r["k"] for r in out.collect()) == list(range(50_000))
-
-        # tiny file below the floor: untouched
-        tables.PAR_FLOOR_MIN_BYTES = 10**15
-        same = tables._scan_parallelism_floor(spark, df, p)
-        assert same is df
-
-        # multi-row-group file at/above parallelism: untouched
-        tables.PAR_FLOOR_MIN_BYTES = 1
-        p2 = str(tmp_path / "many_rg.parquet")
-        pq.write_table(tbl, p2, row_group_size=max(1, 50_000 // (par + 1)))
-        rg2 = tables._row_group_count(p2)[0]
-        assert rg2 >= par
-        df2 = spark.read.parquet(p2)
-        assert tables._scan_parallelism_floor(spark, df2, p2) is df2
-
-        # non-stat-able path: untouched (assume splittable at scale)
-        assert tables._row_group_count("s3://bucket/x.parquet") == (-1, 0)
-        assert (
-            tables._scan_parallelism_floor(
-                spark, df, "s3://bucket/x.parquet"
-            )
-            is df
-        )
-    finally:
-        tables.PAR_FLOOR_MIN_BYTES = old_floor
