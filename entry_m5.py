@@ -2710,42 +2710,87 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # round-9: persisted dedup index (crawl-ingest without re-minhashing)
 # ------------------------------------------------------------------ #
 
-# build-once dedup index per (sf_dir, source fingerprint) — same
-# write-once lifecycle as _IVF_IDX / the ORC layout: buckets + shingle
-# sets are parquet an ingest batch PROBES, so per-batch cost is
-# batch-proportional instead of re-scanning the corpus every time
-_DDX_IDX: dict[tuple, str] = {}
-_DDX_IDX_SEQ = [0]
+# Staged dedup indexes, built once per (sf_dir, source fingerprint,
+# recipe) — same write-once lifecycle as _IVF_IDX / the ORC layout:
+# buckets + shingle sets are parquet an ingest batch PROBES, so
+# per-batch cost is batch-proportional instead of re-scanning the
+# corpus every time.  A recipe names the corpus slice persisted and
+# the batch appended after it (None: no batch):
+#   probe      every doc but the % 50 = 17 batch
+#              (dedup_incremental_persisted)
+#   pristine   the % 10 = 3 slice — the ingest rows' start state
+#   lifecycle  the % 10 = 3 slice + batch 1 (% 50 = 17, ids ≡ 7 mod 10,
+#              so disjoint from the slice) appended
+#              (dedup_incremental_append, dedup_compact_probe)
+_DDX_RECIPES = {
+    "probe": ("doc_id % 50 != 17", None),
+    "pristine": ("doc_id % 10 = 3", None),
+    "lifecycle": ("doc_id % 10 = 3", "doc_id % 50 = 17"),
+}
+_DDX_BUILT: dict[tuple, str] = {}
+_DDX_COPIES: dict[str, str] = {}
+_DDX_SEQ = [0]
 
 
-def _dedup_index_path(spark: SparkSession, sf_dir: str) -> str:
+def _ddx_dir(tag: str) -> str:
+    """A fresh temp directory, removed at process exit."""
     import os
     import shutil
     import tempfile
 
-    from mahout_samsara_book_spark.operators.dedup import dedup_index_persist
+    _DDX_SEQ[0] += 1
+    path = register_tmpdir(
+        tempfile.gettempdir()
+        + f"/spark_graft_ddx{tag}_{os.getpid()}_{_DDX_SEQ[0]}"
+    )
+    shutil.rmtree(path, ignore_errors=True)
+    return path
+
+
+def _staged_index(
+    spark: SparkSession, sf_dir: str, recipe: str, copy_for: str | None = None
+) -> str:
+    """Path of the dedup index ``recipe`` (see _DDX_RECIPES) over
+    ``sf_dir``'s documents, built once.  A query that MUTATES the index
+    (ingest, compaction) passes ``copy_for`` — its own name — and gets
+    a fresh working copy per call at ``<work>/index``: re-appending the
+    same batch would double its shingle rows, so a shared index would
+    be wrong by construction, and the file copy replaces the
+    re-minhash (fixture setup, not the graded operator).  The caller's
+    previous ``<work>`` (with anything else it wrote there) is deleted
+    first, so bench reps do not accumulate one index copy per
+    invocation in /tmp (GBs at sf10); every such caller returns a
+    checkpointed result, which that deletion cannot invalidate."""
+    import os
+    import shutil
+
+    from mahout_samsara_book_spark.operators.dedup import (
+        dedup_index_append,
+        dedup_index_persist,
+    )
     from mahout_samsara_book_spark.sources.tables import source_fingerprint
 
-    key = (sf_dir, source_fingerprint(sf_dir, "documents"))
-    path = _DDX_IDX.get(key)
+    key = (sf_dir, source_fingerprint(sf_dir, "documents"), recipe)
+    path = _DDX_BUILT.get(key)
     if path is None or not os.path.exists(path + "/manifest/_SUCCESS"):
-        _DDX_IDX_SEQ[0] += 1
-        path = register_tmpdir(
-            tempfile.gettempdir()
-            + f"/spark_graft_ddxidx_{os.getpid()}_{_DDX_IDX_SEQ[0]}"
+        path = _ddx_dir(recipe)
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "text"
         )
-        shutil.rmtree(path, ignore_errors=True)
-        corpus = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .filter(F.col("doc_id") % 50 != 17)
-        )
-        dedup_index_persist(
-            corpus, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
-            seed=MINHASH_SEED,
-        )
-        _DDX_IDX[key] = path
-    return path
+        corpus_where, batch_where = _DDX_RECIPES[recipe]
+        params = dict(n=3, k=MINHASH_K, bands=LSH_BANDS, seed=MINHASH_SEED)
+        dedup_index_persist(docs.filter(corpus_where), path, **params)
+        if batch_where is not None:
+            dedup_index_append(docs.filter(batch_where), path, **params)
+        _DDX_BUILT[key] = path
+    if copy_for is None:
+        return path
+    prev = _DDX_COPIES.get(copy_for)
+    if prev is not None:
+        shutil.rmtree(prev, ignore_errors=True)
+    work = _DDX_COPIES[copy_for] = _ddx_dir(copy_for)
+    shutil.copytree(path, work + "/index")
+    return work + "/index"
 
 
 def q_dedup_incremental_persisted(
@@ -2776,7 +2821,7 @@ def q_dedup_incremental_persisted(
             )
         )
     )
-    path = _dedup_index_path(spark, sf_dir)
+    path = _staged_index(spark, sf_dir, "probe")
     out = incremental_dedup_persisted(
         batch, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
         seed=MINHASH_SEED, threshold=0.5,
@@ -2801,51 +2846,6 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # consecutive batches see each other through the index (VERDICT r9
 # item 3: dedup_index_persist promised the append half; now it's real)
 # ------------------------------------------------------------------ #
-
-_DDX_LC: dict[tuple, str] = {}
-_DDX_LC_SEQ = [0]
-
-
-def _dedup_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once two-batch lifecycle state per (sf_dir, source
-    fingerprint): index ← corpus slice (doc_id % 10 = 3), then batch 1
-    (doc_id % 50 = 17 — ids always ≡ 7 mod 10, disjoint from the
-    corpus) is APPENDED via dedup_index_append.  Batch 2 probes find
-    batch-1 docs purely through the appended parquet rows — batch 1 is
-    never re-minhashed at probe time."""
-    import os
-    import shutil
-    import tempfile
-
-    from mahout_samsara_book_spark.operators.dedup import (
-        dedup_index_append,
-        dedup_index_persist,
-    )
-    from mahout_samsara_book_spark.sources.tables import source_fingerprint
-
-    key = (sf_dir, source_fingerprint(sf_dir, "documents"))
-    path = _DDX_LC.get(key)
-    if path is None or not os.path.exists(path + "/manifest/_SUCCESS"):
-        _DDX_LC_SEQ[0] += 1
-        path = register_tmpdir(
-            tempfile.gettempdir()
-            + f"/spark_graft_ddxlc_{os.getpid()}_{_DDX_LC_SEQ[0]}"
-        )
-        shutil.rmtree(path, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        dedup_index_persist(
-            docs.filter(F.col("doc_id") % 10 == 3), path,
-            n=3, k=MINHASH_K, bands=LSH_BANDS, seed=MINHASH_SEED,
-        )
-        dedup_index_append(
-            docs.filter(F.col("doc_id") % 50 == 17), path,
-            n=3, k=MINHASH_K, bands=LSH_BANDS, seed=MINHASH_SEED,
-        )
-        _DDX_LC[key] = path
-    return path
-
 
 # re-keying offset for synthetic batches probed against a persisted
 # index: MUST be outside any reachable doc_id domain (ADVICE r10 —
@@ -2875,7 +2875,7 @@ def q_dedup_incremental_append(
         incremental_dedup_persisted,
     )
 
-    path = _dedup_lifecycle_path(spark, sf_dir)
+    path = _staged_index(spark, sf_dir, "lifecycle")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
@@ -2929,47 +2929,6 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # each other or with real ids (see DDX_REKEY)
 DDX_REKEY2 = 1 << 41
 
-_DDX_LC3_SEQ = [0]
-_DDX_LC3_LAST: list = [None]
-_DDX_LC3_PRISTINE: dict[tuple, str] = {}
-
-
-def _pristine_index(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once PRISTINE index (corpus slice only, no batches) per
-    (sf_dir, fingerprint).  The lifecycle query copies it to a fresh
-    working dir per invocation instead of re-minhashing the corpus:
-    ingest MUTATES the index, so a shared one can't be probed twice,
-    but the pre-ingest state is pure fixture — the graded operator is
-    the probe/append compose, not the corpus build (which
-    dedup_incremental_persisted's staging already grades)."""
-    import os
-    import shutil
-    import tempfile
-
-    from mahout_samsara_book_spark.operators.dedup import (
-        dedup_index_persist,
-    )
-    from mahout_samsara_book_spark.sources.tables import source_fingerprint
-
-    key = (sf_dir, source_fingerprint(sf_dir, "documents"))
-    path = _DDX_LC3_PRISTINE.get(key)
-    if path is None or not os.path.exists(path + "/manifest/_SUCCESS"):
-        _DDX_LC3_SEQ[0] += 1
-        path = register_tmpdir(
-            tempfile.gettempdir()
-            + f"/spark_graft_ddxlc3p_{os.getpid()}_{_DDX_LC3_SEQ[0]}"
-        )
-        shutil.rmtree(path, ignore_errors=True)
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        dedup_index_persist(
-            docs.filter(F.col("doc_id") % 10 == 3), path,
-            n=3, k=MINHASH_K, bands=LSH_BANDS, seed=MINHASH_SEED,
-        )
-        _DDX_LC3_PRISTINE[key] = path
-    return path
-
 
 def q_dedup_ingest_lifecycle(
     spark: SparkSession, sf_dir: str
@@ -2984,31 +2943,13 @@ def q_dedup_ingest_lifecycle(
     next ingest so it grades the index snapshot its batch actually saw
     (the lifecycle is inherently sequential — the single-writer
     contract, dedup.py:ingest_batch).  Each invocation works on a
-    FRESH COPY of the build-once pristine index: ingest MUTATES the
-    index, and re-appending the same batch would double its shingle
-    rows (the documented failed-append hazard), so a shared index
-    would be wrong by construction; the file copy replaces the
-    re-minhash (fixture setup, not the graded compose) and keeps
-    per-invocation cost at copy + 3×(probe + append)."""
-    import os
-    import shutil
-    import tempfile
-
+    fresh copy of the build-once pristine index (_staged_index), so
+    per-invocation cost is copy + 3×(probe + append)."""
     from mahout_samsara_book_spark.operators.dedup import ingest_batch
 
-    # drop the PREVIOUS invocation's mutated working copy before
-    # creating a new one — bench reps would otherwise accumulate one
-    # full index copy per invocation in /tmp (GBs at sf10)
-    if _DDX_LC3_LAST[0] is not None:
-        shutil.rmtree(_DDX_LC3_LAST[0], ignore_errors=True)
-    _DDX_LC3_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_ddxlc3_{os.getpid()}_{_DDX_LC3_SEQ[0]}"
+    path = _staged_index(
+        spark, sf_dir, "pristine", copy_for="dedup_ingest_lifecycle"
     )
-    _DDX_LC3_LAST[0] = path
-    shutil.rmtree(path, ignore_errors=True)
-    shutil.copytree(_pristine_index(spark, sf_dir), path)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
     )
@@ -3060,7 +3001,6 @@ def q_dedup_ingest_lifecycle(
             # append), with the cross-batch sequencing (single-writer)
             # unchanged because ingest_batch returns only after both
             # finish.
-            sh_b, sig_b = builds[i - 1].result()
             outs.append(
                 ingest_batch(
                     b, path, n=3, k=MINHASH_K, bands=LSH_BANDS,
@@ -3068,7 +3008,7 @@ def q_dedup_ingest_lifecycle(
                     materialize=lambda df, i=i: df.withColumn(
                         "batch", F.lit(i).cast("long")
                     ).localCheckpoint(),
-                    _sh=sh_b, _sig=sig_b,
+                    _built=builds[i - 1].result(),
                 )
             )
     union = outs[0]
@@ -4614,8 +4554,6 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # ------------------------------------------------------------------ #
 
 _DDX_STRM_BATCHES: dict[tuple, str] = {}
-_DDX_STRM_SEQ = [0]
-_DDX_STRM_LAST: list = [None]
 
 
 def _ddx_stream_batches(spark: SparkSession, sf_dir: str) -> str:
@@ -4625,7 +4563,6 @@ def _ddx_stream_batches(spark: SparkSession, sf_dir: str) -> str:
     import glob
     import os
     import shutil
-    import tempfile
 
     from mahout_samsara_book_spark.sources.tables import source_fingerprint
 
@@ -4633,12 +4570,7 @@ def _ddx_stream_batches(spark: SparkSession, sf_dir: str) -> str:
     path = _DDX_STRM_BATCHES.get(key)
     if path is not None and os.path.exists(path + "/b02.parquet"):
         return path
-    _DDX_STRM_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_ddxsb_{os.getpid()}_{_DDX_STRM_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = _ddx_dir("sb")
     os.makedirs(path)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -4669,31 +4601,20 @@ def q_ev_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     index (streaming/ingest.py).  Epoch i = lifecycle batch i+1, so
     o_dedup_ingest_lifecycle grades the run unchanged — the streaming
     engine's sequential foreachBatch delivery IS the single-writer
-    lifecycle.  The result is localCheckpoint-materialized so the next
-    invocation's working-dir cleanup can never invalidate it."""
+    lifecycle.  The probe outputs land beside the index copy in the
+    call's working dir, and the result is localCheckpoint-materialized
+    so the next invocation's working-dir cleanup can never invalidate
+    it."""
     import os
-    import shutil
-    import tempfile
 
     from mahout_samsara_book_spark.streaming.ingest import run_stream_ingest
 
-    # drop the PREVIOUS invocation's working copy + output (the
-    # lifecycle row's bench-rep discipline; results are checkpointed)
-    for prev in _DDX_STRM_LAST[0] or []:
-        shutil.rmtree(prev, ignore_errors=True)
-    _DDX_STRM_SEQ[0] += 1
-    base = (
-        tempfile.gettempdir()
-        + f"/spark_graft_ddxsi_{os.getpid()}_{_DDX_STRM_SEQ[0]}"
+    idx = _staged_index(
+        spark, sf_dir, "pristine", copy_for="ev_stream_ingest"
     )
-    idx, outp = register_tmpdir(base + "_idx"), register_tmpdir(base + "_out")
-    _DDX_STRM_LAST[0] = [idx, outp]
-    shutil.rmtree(idx, ignore_errors=True)
-    shutil.rmtree(outp, ignore_errors=True)
-    shutil.copytree(_pristine_index(spark, sf_dir), idx)
     batches = _ddx_stream_batches(spark, sf_dir)
     out = run_stream_ingest(
-        spark, batches, idx, outp,
+        spark, batches, idx, os.path.dirname(idx) + "/out",
         n=3, k=MINHASH_K, bands=LSH_BANDS, seed=MINHASH_SEED,
         threshold=0.5,
     )
@@ -4727,33 +4648,19 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # hash.
 # ------------------------------------------------------------------ #
 
-_DDX_CPT_SEQ = [0]
-_DDX_CPT_LAST: list = [None]
-
 
 def q_dedup_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
     from mahout_samsara_book_spark.operators.dedup import (
         dedup_index_compact,
         incremental_dedup_persisted,
     )
 
-    if _DDX_CPT_LAST[0] is not None:
-        shutil.rmtree(_DDX_CPT_LAST[0], ignore_errors=True)
-    _DDX_CPT_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_ddxcpt_{os.getpid()}_{_DDX_CPT_SEQ[0]}"
-    )
-    _DDX_CPT_LAST[0] = path
-    shutil.rmtree(path, ignore_errors=True)
     # fresh copy: compaction MUTATES the index (new generation + GC),
     # and the shared lifecycle fixture must keep its layout for
     # dedup_incremental_append's own grading
-    shutil.copytree(_dedup_lifecycle_path(spark, sf_dir), path)
+    path = _staged_index(
+        spark, sf_dir, "lifecycle", copy_for="dedup_compact_probe"
+    )
     dedup_index_compact(spark, path, bands=LSH_BANDS)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text"

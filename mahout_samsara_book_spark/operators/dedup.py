@@ -876,6 +876,93 @@ def _incremental_match(
     )
 
 
+# reserved batch_id of the initial corpus build (dedup_index_persist)
+INDEX_CORPUS_BATCH = "corpus"
+
+
+def _index_write_mode(batch_id: str) -> str:
+    """Write mode of every index write (data tables and manifest): the
+    corpus build overwrites, so a re-persist starts clean; every other
+    batch (append, compaction generation) appends."""
+    return "overwrite" if batch_id == INDEX_CORPUS_BATCH else "append"
+
+
+def _index_rows(
+    docs: DataFrame,
+    n: int,
+    k: int,
+    bands: int,
+    seed: int,
+    id_col: str,
+    text_col: str,
+    built: tuple[DataFrame, DataFrame] | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(shingles, buckets)`` index rows of ``docs`` — the one batch
+    build of the corpus build and the append.  ``built`` is a prebuilt
+    ``(shingles, signatures)`` pair (:func:`ingest_batch` shares its
+    probe's); otherwise the fused build runs here, its shingle relation
+    tracked because both table writes read it."""
+    _assert_index_id_type(docs, id_col)
+    if built is None:
+        sh, sig = _shingle_sig_fused(docs, n, k, seed, id_col, text_col)
+        track(sh)
+    else:
+        sh, sig = built
+    return sh, band_buckets(sig, bands, k // bands, id_col)
+
+
+def _write_index_batch(
+    shingles: DataFrame,
+    buckets: DataFrame,
+    path: str,
+    batch_id: str,
+    bands: int,
+    _crash_point: str | None = None,
+) -> None:
+    """Write one batch of index rows — the ONE data-write path of the
+    persisted index (corpus build, append, compaction).  Both tables
+    are partitioned by ``batch_id``, so probes take it from directory
+    names and the manifest filter prunes uncommitted batches at file
+    level.  Buckets are repartitioned by ``band`` first: each batch
+    lands exactly one file per band instead of shuffle-partitions ×
+    bands small files, the small-files discipline a long-lived index
+    needs.  Mode follows :func:`_index_write_mode`.
+
+    The two writes are independent jobs, invisible to probes until the
+    manifest commit, so they overlap on two driver threads (guide §2.6;
+    any crash interleaving leaves the batch invisible-by-manifest).
+    ``_crash_point`` (test-only: ``"after_buckets"`` /
+    ``"after_shingles"``) pins buckets-then-shingles order and raises
+    after the named write."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    mode = _index_write_mode(batch_id)
+
+    def _buckets() -> None:
+        buckets.withColumn("batch_id", F.lit(batch_id)).repartition(
+            bands, "band"
+        ).write.mode(mode).partitionBy("band", "batch_id").parquet(
+            path + "/buckets"
+        )
+
+    def _shingles() -> None:
+        shingles.withColumn("batch_id", F.lit(batch_id)).write.mode(
+            mode
+        ).partitionBy("batch_id").parquet(path + "/shingles")
+
+    if _crash_point is not None:
+        for point, write in (
+            ("after_buckets", _buckets), ("after_shingles", _shingles)
+        ):
+            write()
+            if _crash_point == point:
+                raise RuntimeError(f"injected crash: {point}")
+        return
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        for fut in [pool.submit(_buckets), pool.submit(_shingles)]:
+            fut.result()
+
+
 def dedup_index_persist(
     corpus: DataFrame,
     path: str,
@@ -890,52 +977,26 @@ def dedup_index_persist(
     (id, sig, partitioned by band) and ``<path>/shingles`` (id, h)
     parquet — the crawl-pipeline answer to "don't re-minhash the corpus
     on every ingest batch": :func:`incremental_dedup` recomputes corpus
-    shingles + signatures per invocation (one full corpus scan + k
-    min-aggregates), which at 100 TB dwarfs the batch-proportional probe
-    work the incremental shape exists for.  The index is written once;
-    each batch probes it relationally (:func:`incremental_dedup_persisted`)
-    and appends its own rows without re-clustering anything.  Buckets
-    are partitioned by ``band`` so a probe that touches a band subset
-    prunes whole partitions at the file level (PLANS.md 'incremental
-    dedup persisted-index probe').  Every row carries a ``batch_id``
-    and ``<path>/manifest`` lists the COMMITTED batch ids (the corpus
-    build commits as ``INDEX_CORPUS_BATCH``, written last) — see
-    :func:`dedup_index_append` for the crash-safe append protocol."""
-    _assert_index_id_type(corpus, id_col)
-    rows = k // bands
-    # fused shingle+signature build (one hash(id) exchange, see
-    # _shingle_sig_fused); the two table writes are independent and
-    # invisible until the manifest commit, so they overlap (guide §2.6)
-    fsh, fsig = _shingle_sig_fused(corpus, n, k, seed, id_col, text_col)
-    sh_c = track(fsh)
-    bkt = band_buckets(fsig, bands, rows, id_col)
+    shingles + signatures per invocation, which at 100 TB dwarfs the
+    batch-proportional probe work the incremental shape exists for.
+    Each batch probes the index relationally
+    (:func:`incremental_dedup_persisted`) and appends its own rows
+    (:func:`dedup_index_append`).  Partitioning buckets by ``band``
+    lets a probe that touches a band subset prune whole partitions at
+    the file level (PLANS.md 'incremental dedup persisted-index
+    probe').
 
-    def _write_shingles() -> None:
-        sh_c.withColumn(
-            "batch_id", F.lit(INDEX_CORPUS_BATCH)
-        ).write.mode("overwrite").partitionBy("batch_id").parquet(
-            path + "/shingles"
-        )
-
-    def _write_buckets() -> None:
-        bkt.withColumn(
-            "batch_id", F.lit(INDEX_CORPUS_BATCH)
-        ).write.mode("overwrite").partitionBy("band", "batch_id").parquet(
-            path + "/buckets"
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fs = pool.submit(_write_shingles)
-        fb = pool.submit(_write_buckets)
-        fs.result()
-        fb.result()
-    _manifest_commit(corpus.sparkSession, path, INDEX_CORPUS_BATCH)
-
-
-# reserved batch_id of the initial corpus build (dedup_index_persist)
-INDEX_CORPUS_BATCH = "corpus"
+    The rows go through the one batch writer
+    (:func:`_write_index_batch`) as batch ``INDEX_CORPUS_BATCH``, whose
+    mode is overwrite: a re-persist replaces every earlier batch, on
+    disk and in ``<path>/manifest`` (committed last)."""
+    _write_index_batch(
+        *_index_rows(corpus, n, k, bands, seed, id_col, text_col),
+        path, INDEX_CORPUS_BATCH, bands,
+    )
+    _manifest_commit(
+        corpus.sparkSession, path + "/manifest", INDEX_CORPUS_BATCH
+    )
 
 
 def _assert_index_id_type(df: DataFrame, id_col: str) -> None:
@@ -974,13 +1035,14 @@ def _manifest_local_path(mdir: str) -> str | None:
     return None
 
 
-def _manifest_commit(spark, path: str, batch_id: str) -> None:
-    """Append one committed-batch row to ``<path>/manifest`` — the
-    ATOMIC COMMIT of an index write (VERDICT r11 item 3): probes filter
-    bucket/shingle rows to manifest-listed batch ids, so data rows are
-    invisible until this row lands.  The row is a single tiny parquet
-    file whose append is an atomic rename on every sane filesystem;
-    the corpus build uses overwrite so a re-persist starts clean.
+def _manifest_commit(spark, mdir: str, batch_id: str) -> None:
+    """Append one committed-batch row to the manifest directory
+    ``mdir`` (``<path>/manifest``, or compaction's staged
+    ``manifest_next``) — the ATOMIC COMMIT of an index write (VERDICT
+    r11 item 3): probes filter bucket/shingle rows to manifest-listed
+    batch ids, so data rows are invisible until this row lands.  Mode
+    follows :func:`_index_write_mode`, like the data writes: the corpus
+    build overwrites, every other batch appends.
 
     The manifest is O(batches) rows of pure METADATA, so on a local
     filesystem it is WRITTEN driver-side (pyarrow to a temp file, then
@@ -989,11 +1051,12 @@ def _manifest_commit(spark, path: str, batch_id: str) -> None:
     shape (guide §5: the driver owns metadata, executors own data).
     The previous JVM-literal one-row Spark write cost a full job +
     commit protocol (~0.16 s and one job per ingest on local[32];
-    the earlier ``createDataFrame`` variant measured 6-9 s).  A
-    ``_SUCCESS`` marker is kept because fixture builders use
-    ``manifest/_SUCCESS`` as the build-complete sentinel.  Non-local
-    paths (hdfs:/s3:/...) keep the Spark write."""
-    mdir = path + "/manifest"
+    the earlier ``createDataFrame`` variant measured 6-9 s).  The
+    ``_SUCCESS`` marker lands last: fixture builders use it as the
+    build-complete sentinel, and compaction's recovery swaps in only a
+    complete ``manifest_next``.  Non-local paths (hdfs:/s3:/...) keep
+    the Spark write."""
+    mode = _index_write_mode(batch_id)
     local = _manifest_local_path(mdir)
     if local is not None:
         import os
@@ -1002,7 +1065,7 @@ def _manifest_commit(spark, path: str, batch_id: str) -> None:
         import pyarrow as _pa
         import pyarrow.parquet as _pq
 
-        if batch_id == INDEX_CORPUS_BATCH and os.path.isdir(local):
+        if mode == "overwrite" and os.path.isdir(local):
             import shutil as _shutil
 
             _shutil.rmtree(local)
@@ -1021,9 +1084,9 @@ def _manifest_commit(spark, path: str, batch_id: str) -> None:
         except Exception:  # noqa: BLE001 — cache invalidation only
             pass
         return
-    row = spark.range(1).select(F.lit(batch_id).alias("batch_id"))
-    mode = "overwrite" if batch_id == INDEX_CORPUS_BATCH else "append"
-    row.coalesce(1).write.mode(mode).parquet(path + "/manifest")
+    spark.range(1).select(F.lit(batch_id).alias("batch_id")).coalesce(
+        1
+    ).write.mode(mode).parquet(mdir)
 
 
 def manifest_batch_ids(spark, path: str) -> list[str]:
@@ -1101,20 +1164,21 @@ def committed_index_tables(spark, path: str, id_col: str = "doc_id"):
 
 def dedup_index_compact(spark, path: str, bands: int = 8) -> str:
     """Offline maintenance: fold every COMMITTED batch into one fresh
-    corpus generation, then garbage-collect — the periodic compaction
-    :func:`dedup_index_append`'s directory-per-batch layout plans for.
-    After N ingests the index holds N+1 batch partitions per band plus
-    any crashed-append orphans; compaction rewrites the committed view
-    into a single new generation (``bands`` bucket files, one shingle
-    partition), swaps the manifest to it, and deletes every other
-    batch directory — listings shrink back to O(1) and orphans vanish.
+    corpus generation, then garbage-collect.  After N ingests the index
+    holds N+1 batch partitions per band plus any crashed-append
+    orphans; compaction rewrites the committed view as one new
+    generation through the one batch writer (:func:`_write_index_batch`,
+    append mode: ``bands`` bucket files, one shingle partition), swaps
+    the manifest to it and deletes every other batch directory —
+    listings shrink back to O(1) and orphans vanish.
 
     CRASH-SAFE BY STAGED SWAP, like the append protocol — a blind
     re-run completes recovery from any interruption point:
 
     1. append the compacted rows under a fresh ``gen-<uuid>`` batch_id
        (uncommitted — probes still read the old generation set);
-    2. write ``manifest_next/`` containing ONLY the new generation;
+    2. write ``manifest_next/`` containing ONLY the new generation
+       (:func:`_manifest_commit`, ``_SUCCESS`` last);
     3. swap: rename ``manifest`` → ``manifest_old``, ``manifest_next``
        → ``manifest`` (each rename atomic on a sane filesystem; the
        only probe-visible failure window is between the two renames,
@@ -1123,13 +1187,15 @@ def dedup_index_compact(spark, path: str, bands: int = 8) -> str:
     4. delete ``manifest_old`` and every batch directory not in the
        new generation.
 
-    Re-running after a crash: step-2/3 leftovers are detected and the
-    swap completes before anything else; a step-1 crash just leaves
-    one more invisible orphan for the re-run's step 4 to collect.
-    Single-writer: compaction is an exclusive maintenance window — do
-    not ingest concurrently.  Directory surgery uses local-filesystem
-    renames (the graded deployments; an object-store port would swap a
-    pointer object instead).  Returns the new generation's batch_id."""
+    Re-running after a crash: a complete ``manifest_next`` (step 3
+    leftovers) is swapped in before anything else, an incomplete one
+    (a step-2 crash, no ``_SUCCESS``) is discarded, and a step-1 crash
+    just leaves one more invisible orphan for the re-run's step 4 to
+    collect.  Single-writer: compaction is an exclusive maintenance
+    window — do not ingest concurrently.  Directory surgery uses
+    local-filesystem renames (the graded deployments; an object-store
+    port would swap a pointer object instead).  Returns the new
+    generation's batch_id."""
     import glob
     import os
     import shutil
@@ -1138,56 +1204,20 @@ def dedup_index_compact(spark, path: str, bands: int = 8) -> str:
     man, man_next, man_old = (
         path + "/manifest", path + "/manifest_next", path + "/manifest_old"
     )
-    # recovery: finish an interrupted swap FIRST (idempotent)
-    if os.path.exists(man_next):
+    # recovery: finish an interrupted swap FIRST (idempotent); a
+    # manifest_next without _SUCCESS is a step-2 crash — discard it
+    if os.path.exists(man_next + "/_SUCCESS"):
         if os.path.exists(man):
             os.rename(man, man_old)
         os.rename(man_next, man)
         spark.catalog.refreshByPath(man)
+    shutil.rmtree(man_next, ignore_errors=True)
     if os.path.exists(man_old):
         shutil.rmtree(man_old)
     gen = "gen-" + uuid.uuid4().hex
     bkt, sh = committed_index_tables(spark, path)
-
-    def _rewrite_buckets() -> None:
-        bkt.withColumn("batch_id", F.lit(gen)).repartition(
-            bands, "band"
-        ).write.mode("append").partitionBy("band", "batch_id").parquet(
-            path + "/buckets"
-        )
-
-    def _rewrite_shingles() -> None:
-        sh.withColumn("batch_id", F.lit(gen)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(path + "/shingles")
-
-    # the two generation rewrites are independent jobs over disjoint
-    # tables and both invisible until the manifest swap — overlap them
-    # (guide §2.6), same discipline as dedup_index_append's writes
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fb = pool.submit(_rewrite_buckets)
-        fs = pool.submit(_rewrite_shingles)
-        fb.result()
-        fs.result()
-    # driver-side metadata write (atomic temp+rename), mirroring
-    # _manifest_commit — the one-row manifest_next needs no Spark job
-    if "://" not in man_next:
-        import pyarrow as _pa
-        import pyarrow.parquet as _pq
-
-        os.makedirs(man_next, exist_ok=True)
-        tbl = _pa.table({"batch_id": _pa.array([gen], _pa.string())})
-        tmp = f"{man_next}/.part-{uuid.uuid4().hex}.parquet.tmp"
-        _pq.write_table(tbl, tmp)
-        os.rename(tmp, f"{man_next}/part-{uuid.uuid4().hex}.parquet")
-        with open(man_next + "/_SUCCESS", "w"):
-            pass
-    else:  # pragma: no cover — remote-filesystem fallback
-        spark.range(1).select(F.lit(gen).alias("batch_id")).coalesce(
-            1
-        ).write.mode("overwrite").parquet(man_next)
+    _write_index_batch(sh, bkt, path, gen, bands)
+    _manifest_commit(spark, man_next, gen)
     os.rename(man, man_old)
     os.rename(man_next, man)
     shutil.rmtree(man_old)
@@ -1218,26 +1248,21 @@ def dedup_index_append(
     text_col: str = "text",
     batch_id: str | None = None,
     _crash_point: str | None = None,
-    _sh: DataFrame | None = None,
-    _sig: DataFrame | None = None,
+    _built: tuple[DataFrame, DataFrame] | None = None,
 ) -> str:
     """Append a batch's OWN bucket + shingle rows to a persisted dedup
-    index (round-10, VERDICT r9 item 3 — the half of the
-    :func:`dedup_index_persist` lifecycle that was previously promised
-    but not implemented): after a batch is probed, its rows join the
-    index so every LATER batch sees it exactly like corpus — the
-    probe/append pair is the full crawl-ingest loop, and consecutive
-    batches dedup against each other without any re-clustering.
-
-    Cost is batch-proportional: the batch is shingled/minhashed once
-    (work the probe already did for the same batch — Spark recomputes
-    it here, which at batch scale is noise next to a corpus rescan) and
-    the writes land ONLY in the batch's ``band=...`` partitions
-    (dynamic partition append — untouched bands gain no files).
-    Probe/append ordering is a non-issue: the probe anti-joins the
-    index against the batch's own ids (parquet listings are taken at
-    execution, so "create the probe first" would NOT hide the appended
-    rows — measured, not assumed).
+    index (round-10, VERDICT r9 item 3): after a batch is probed, its
+    rows join the index so every LATER batch sees it exactly like
+    corpus — the probe/append pair is the full crawl-ingest loop, and
+    consecutive batches dedup against each other without any
+    re-clustering.  The batch is built like the corpus
+    (:func:`_index_rows`; ``_built`` hands over :func:`ingest_batch`'s
+    prebuilt pair) and written through the one batch writer
+    (:func:`_write_index_batch`) in append mode, so only the batch's
+    own ``band=...`` partitions gain files.  Probe/append ordering is a
+    non-issue: the probe anti-joins the index against the batch's own
+    ids (parquet listings are taken at execution, so "create the probe
+    first" would NOT hide the appended rows — measured, not assumed).
 
     Failure atomicity (VERDICT r11 item 3 — manifest commit): every
     data row carries this append's ``batch_id`` (a fresh uuid unless
@@ -1245,90 +1270,32 @@ def dedup_index_append(
     row to ``<path>/manifest`` AFTER both data writes.  Probes
     (:func:`committed_index_tables`) filter both tables to
     manifest-listed batch ids, so a crash anywhere before the manifest
-    row leaves the batch entirely INVISIBLE — not recall-degraded,
-    not Jaccard-skewed — and recovery is a blind re-run of the same
-    append (which draws a NEW batch_id; the crashed attempt's rows
-    stay unreferenced garbage that a future compaction can drop, never
-    double-counted because only one of the two batch_ids can ever be
-    committed).  Tested by crash injection via ``_crash_point``
-    (``"after_buckets"`` / ``"after_shingles"`` — raises after that
-    write, test-only) in tests/test_incremental_dedup.py.  Returns the
+    row leaves the batch entirely INVISIBLE, and recovery is a blind
+    re-run of the same append (which draws a NEW batch_id; the crashed
+    attempt's rows stay unreferenced garbage that
+    :func:`dedup_index_compact` drops).  Tested by crash injection via
+    ``_crash_point`` in tests/test_incremental_dedup.py.  Returns the
     committed batch_id.
 
     Single-writer contract (VERDICT r10): the index supports ONE
     ingest stream.  Two batches racing probe-before-the-other's-append
-    each miss the other's documents (each probes an index that does
-    not yet hold the other) — the manifest makes concurrent appends
-    crash-safe at the storage level, but the contract is still "each
-    batch sees everything COMMITTED before it", so serialize ingest
-    (the crawl-pipeline shape this models); shard the corpus into
-    per-writer indexes if parallel ingest is required."""
+    each miss the other's documents — the contract is "each batch sees
+    everything COMMITTED before it", so serialize ingest; shard the
+    corpus into per-writer indexes if parallel ingest is required."""
     import uuid
 
-    _assert_index_id_type(batch, id_col)
     if batch_id is None:
         batch_id = uuid.uuid4().hex
-    rows = k // bands
-    # round-12 (guide §1.2/§2.4): a caller that already shingled and
-    # minhashed this batch (ingest_batch's probe) passes the persisted
-    # relations in, so the append's two writes re-derive nothing — the
-    # batch text is tokenized once per ingest, not once per consumer.
-    sh_b = (
-        shingle_hashes(batch, n, id_col, text_col) if _sh is None else _sh
-    )
-    sig = (
-        minhash_signatures(sh_b, k, seed, id_col) if _sig is None else _sig
-    )
-    bkt = band_buckets(sig, bands, rows, id_col)
-    # repartition by band before the dynamic-partition append: without
-    # it every append lands numShufflePartitions × bands small files
-    # (256 per batch at the default 32), and a long-lived index decays
-    # into a small-files swamp the probes pay for on every listing.
-    # One narrow extra shuffle per batch buys exactly `bands` files
-    # per append — the 100 TB small-files discipline.  batch_id is a
-    # PARTITION column on both tables: probes take it from directory
-    # names (zero bytes read per row, ReadSchema untouched) and the
-    # manifest semi-join prunes uncommitted batches at FILE level; the
-    # trade is one directory per (band, batch) — a long-lived index
-    # compacts old batches into the corpus partition periodically,
-    # which also drops any crashed-append orphans.
-    def _write_buckets() -> None:
-        bkt.withColumn("batch_id", F.lit(batch_id)).repartition(
-            bands, "band"
-        ).write.mode("append").partitionBy("band", "batch_id").parquet(
-            path + "/buckets"
+    if batch_id == INDEX_CORPUS_BATCH:
+        raise ValueError(
+            f"batch_id {INDEX_CORPUS_BATCH!r} is reserved for "
+            "dedup_index_persist (its writes overwrite the index)"
         )
-
-    def _write_shingles() -> None:
-        sh_b.withColumn("batch_id", F.lit(batch_id)).write.mode(
-            "append"
-        ).partitionBy("batch_id").parquet(path + "/shingles")
-
-    if _crash_point is not None:
-        # crash-injection tests pin a deterministic write order
-        _write_buckets()
-        if _crash_point == "after_buckets":
-            raise RuntimeError("injected crash: after_buckets")
-        _write_shingles()
-        if _crash_point == "after_shingles":
-            raise RuntimeError("injected crash: after_shingles")
-    else:
-        # The two data writes are INDEPENDENT jobs over the shared
-        # cached batch relations, and neither is visible to probes
-        # until the manifest row lands — so they overlap (guide §2.6:
-        # submit independent jobs from driver threads so one job's
-        # task tail back-fills the other's idle cores).  Write order
-        # stopped being a safety property when the manifest became
-        # the commit marker (VERDICT r11 item 3): any interleaving of
-        # a crash leaves the batch invisible-by-manifest.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fb = pool.submit(_write_buckets)
-            fs = pool.submit(_write_shingles)
-            fb.result()
-            fs.result()
-    _manifest_commit(batch.sparkSession, path, batch_id)
+    _write_index_batch(
+        *_index_rows(batch, n, k, bands, seed, id_col, text_col, _built),
+        path, batch_id, bands, _crash_point,
+    )
+    _manifest_commit(batch.sparkSession, path + "/manifest", batch_id)
     return batch_id
 
 
@@ -1345,8 +1312,7 @@ def ingest_batch(
     batch_id: str | None = None,
     skip_if_committed: bool = False,
     materialize=None,
-    _sh: DataFrame | None = None,
-    _sig: DataFrame | None = None,
+    _built: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """One full crawl-ingest step against a persisted index: probe the
     batch (:func:`incremental_dedup_persisted`), then append its rows
@@ -1403,35 +1369,38 @@ def ingest_batch(
     # re-analyzed the fused subtree per reference, ~350 ms/probe), and
     # the overlapped probe/append threads can no longer both compute
     # an unmaterialized cache entry.  Both relations are batch-sized.
-    # ``_sh``/``_sig`` (round-13, guide §2.6): the fused build depends
-    # ONLY on the batch text, never on the index, so a caller that
-    # knows several batches up front (the lifecycle rows) can submit
-    # every build concurrently from driver threads and hand each
-    # ingest its finished pair — the build job no longer serializes
-    # ahead of the probe/append chain.  The single-writer contract is
-    # untouched: probe/append still run strictly per batch.
-    if _sh is None or _sig is None:
-        sh_b, sig_b = _shingle_sig_fused(
+    # ``_built`` (round-13, guide §2.6): the fused build depends ONLY
+    # on the batch text, never on the index, so a caller that knows
+    # several batches up front (the lifecycle rows) can submit every
+    # build concurrently from driver threads and hand each ingest its
+    # finished ``(shingles, signatures)`` pair — the build job no
+    # longer serializes ahead of the probe/append chain.  The
+    # single-writer contract is untouched: probe/append still run
+    # strictly per batch.
+    if _built is None:
+        _built = _shingle_sig_fused(
             batch, n, k, seed, id_col, text_col, materialize=True
         )
-    else:
-        sh_b, sig_b = _sh, _sig
     out = incremental_dedup_persisted(
         batch, path, n=n, k=k, bands=bands, seed=seed,
         threshold=threshold, id_col=id_col, text_col=text_col,
-        _sh=sh_b, _sig=sig_b,
+        _built=_built,
     )
     if skip_if_committed and batch_id is not None:
         # driver-side metadata read (manifest_batch_ids) — the previous
         # limit(1).count() ran a Spark job per re-delivery check
         if batch_id in manifest_batch_ids(batch.sparkSession, path):
             return materialize(out) if materialize is not None else out
-    if materialize is None:
+
+    def _append() -> None:
         dedup_index_append(
             batch, path, n=n, k=k, bands=bands, seed=seed,
             id_col=id_col, text_col=text_col, batch_id=batch_id,
-            _sh=sh_b, _sig=sig_b,
+            _built=_built,
         )
+
+    if materialize is None:
+        _append()
         return out
     # overlap the probe's materialization with the append (see
     # docstring); the probe's committed-id set was bound driver-side
@@ -1442,11 +1411,7 @@ def ingest_batch(
 
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut = pool.submit(materialize, out)
-        dedup_index_append(
-            batch, path, n=n, k=k, bands=bands, seed=seed,
-            id_col=id_col, text_col=text_col, batch_id=batch_id,
-            _sh=sh_b, _sig=sig_b,
-        )
+        _append()
     return fut.result()
 
 
@@ -1460,8 +1425,7 @@ def incremental_dedup_persisted(
     threshold: float = 0.5,
     id_col: str = "doc_id",
     text_col: str = "text",
-    _sh: DataFrame | None = None,
-    _sig: DataFrame | None = None,
+    _built: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """:func:`incremental_dedup` against a PERSISTED index (see
     :func:`dedup_index_persist`): only the BATCH is shingled/minhashed;
@@ -1470,26 +1434,20 @@ def incremental_dedup_persisted(
     identical to the in-session build with the same parameters (the
     index content is deterministic), so the two share an oracle.
 
-    Callers that already hold the batch's shingle/signature relations
-    (:func:`ingest_batch`, where probe AND append consume them) pass
-    them via ``_sh``/``_sig`` so the batch text is tokenized once per
-    ingest.  A standalone probe keeps the lazy recompute: measured at
-    sf0.1, persisting here ADDS wall time (two extra cache
-    materialization barriers against ~0.3 s of saved recompute that
-    Catalyst otherwise pipelines into branches that run anyway)."""
+    Callers that already hold the batch's ``(shingles, signatures)``
+    pair (:func:`ingest_batch`, where probe AND append consume it) pass
+    it as ``_built`` so the batch text is tokenized once per ingest.
+    A standalone probe keeps the lazy recompute: measured at sf0.1,
+    persisting here ADDS wall time (two extra cache materialization
+    barriers against ~0.3 s of saved recompute that Catalyst otherwise
+    pipelines into branches that run anyway)."""
     spark = batch.sparkSession
     rows = k // bands
-    if _sh is None or _sig is None:
-        # standalone probe: fused build (one hash(id) exchange for
-        # shingles + signatures, see _shingle_sig_fused); ingest_batch
-        # passes its own tracked pair in instead
-        _fsh, _fsig = _shingle_sig_fused(
-            batch, n, k, seed, id_col, text_col
-        )
-        sh_b = _fsh if _sh is None else _sh
-        sig_b = _fsig if _sig is None else _sig
-    else:
-        sh_b, sig_b = _sh, _sig
+    # standalone probe: fused build (one hash(id) exchange for
+    # shingles + signatures, see _shingle_sig_fused)
+    sh_b, sig_b = _built or _shingle_sig_fused(
+        batch, n, k, seed, id_col, text_col
+    )
     bkt_b = band_buckets(sig_b, bands, rows, id_col)
     # COMMITTED rows only (manifest semi-join, VERDICT r11 item 3) —
     # a crashed append's orphan rows never reach the probe.  Beyond

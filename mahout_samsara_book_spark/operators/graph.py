@@ -405,87 +405,98 @@ def kcore_peel(edges: DataFrame, k: int, rounds: int = 4) -> DataFrame:
     # the edge build executed twice, 2.7 s + 1.7 s; cached it runs
     # once inside the degree job — degrees() scans every partition, so
     # the cache is fully populated as a side effect, no extra job).
+    # A relation the caller already cached is used as is and never
+    # released here: the operator frees only what it persisted.
     from pyspark import StorageLevel
 
-    e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    e0 = e
+    e = edges
+    e0 = None
+    if edges.storageLevel == StorageLevel.NONE:
+        e = e0 = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    marked: DataFrame | None = None
     prev_marked: DataFrame | None = None
-    deg, n_removed = _ckpt_with_frontier(degrees(e))
-    for _ in range(rounds):
-        if n_removed == 0:
-            break
-        removed = deg.filter(F.col("deg") < F.lit(int(k))).select("node")
-        if n_removed <= KCORE_FRONTIER_BCAST_LIMIT:
-            # one broadcast of the frontier replaces TWO full shuffles
-            # of the edge relation (join by a, then by b) with map-side
-            # lookups; the count is already in hand from the early-exit
-            # check, so the dispatch is free. A frontier past the limit
-            # (~40 MB of longs) keeps the shuffle join.
-            removed = F.broadcast(removed)
-        ra = removed.select(
-            F.col("node").alias("a"), F.lit(True).alias("_ra")
-        )
-        rb = removed.select(
-            F.col("node").alias("b"), F.lit(True).alias("_rb")
-        )
-        # LAZY cache instead of an eager localCheckpoint (round-13):
-        # the degree checkpoint below scans every marked partition
-        # through the loss aggregate, so ONE job materializes marked,
-        # the new degrees, and the frontier metric together — the
-        # separate marked-checkpoint job was pure job-floor (each
-        # round ran two jobs; now it runs one).  The next round's
-        # survivor filter reads the populated cache; the block manager
-        # computes each partition exactly once even with concurrent
-        # consumers.
-        marked = (
-            e.join(ra, "a", "left")
-            .join(rb, "b", "left")
-            .select(
-                "a",
-                "b",
-                F.coalesce("_ra", F.lit(False)).alias("_ra"),
-                F.coalesce("_rb", F.lit(False)).alias("_rb"),
+    try:
+        deg, n_removed = _ckpt_with_frontier(degrees(e))
+        for _ in range(rounds):
+            if n_removed == 0:
+                break
+            removed = deg.filter(F.col("deg") < F.lit(int(k))).select(
+                "node"
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        e = marked.filter(~F.col("_ra") & ~F.col("_rb")).select("a", "b")
-        loss = (
-            marked.filter(F.col("_ra") != F.col("_rb"))
-            .select(
-                F.when(F.col("_ra"), F.col("b"))
-                .otherwise(F.col("a"))
-                .alias("node")
+            if n_removed <= KCORE_FRONTIER_BCAST_LIMIT:
+                # one broadcast of the frontier replaces TWO full
+                # shuffles of the edge relation (join by a, then by b)
+                # with map-side lookups; the count is already in hand
+                # from the early-exit check, so the dispatch is free. A
+                # frontier past the limit (~40 MB of longs) keeps the
+                # shuffle join.
+                removed = F.broadcast(removed)
+            ra = removed.select(
+                F.col("node").alias("a"), F.lit(True).alias("_ra")
             )
-            .groupBy("node")
-            .agg(F.count("*").alias("_lost"))
-        )
-        deg, n_removed = _ckpt_with_frontier(
-            deg.filter(F.col("deg") >= F.lit(int(k)))
-            .join(loss, "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("deg") - F.coalesce(F.col("_lost"), F.lit(0))
-                ).alias("deg"),
+            rb = removed.select(
+                F.col("node").alias("b"), F.lit(True).alias("_rb")
             )
-        )
-        # the deg job above materialized this round's marked cache;
-        # the previous round's (and after round 0, the caller's edge
-        # cache) have served every consumer — release them so the
-        # loop's storage footprint stays one edge relation
-        if prev_marked is not None:
-            prev_marked.unpersist()
-        elif e0 is not None:
-            e0.unpersist()
+            # LAZY cache instead of an eager localCheckpoint (round-13):
+            # the degree checkpoint below scans every marked partition
+            # through the loss aggregate, so ONE job materializes
+            # marked, the new degrees, and the frontier metric together
+            # — the separate marked-checkpoint job was pure job-floor
+            # (each round ran two jobs; now it runs one).  The next
+            # round's survivor filter reads the populated cache; the
+            # block manager computes each partition exactly once even
+            # with concurrent consumers.
+            marked = (
+                e.join(ra, "a", "left")
+                .join(rb, "b", "left")
+                .select(
+                    "a",
+                    "b",
+                    F.coalesce("_ra", F.lit(False)).alias("_ra"),
+                    F.coalesce("_rb", F.lit(False)).alias("_rb"),
+                )
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            e = marked.filter(~F.col("_ra") & ~F.col("_rb")).select(
+                "a", "b"
+            )
+            loss = (
+                marked.filter(F.col("_ra") != F.col("_rb"))
+                .select(
+                    F.when(F.col("_ra"), F.col("b"))
+                    .otherwise(F.col("a"))
+                    .alias("node")
+                )
+                .groupBy("node")
+                .agg(F.count("*").alias("_lost"))
+            )
+            deg, n_removed = _ckpt_with_frontier(
+                deg.filter(F.col("deg") >= F.lit(int(k)))
+                .join(loss, "node", "left")
+                .select(
+                    "node",
+                    (
+                        F.col("deg") - F.coalesce(F.col("_lost"), F.lit(0))
+                    ).alias("deg"),
+                )
+            )
+            # the deg job above materialized this round's marked cache;
+            # the previous round's (and after round 0, this call's edge
+            # cache) have served every consumer — release them so the
+            # loop's storage footprint stays one edge relation
+            for done in (prev_marked, e0):
+                if done is not None:
+                    done.unpersist()
             e0 = None
-        prev_marked = marked
-    # the maintained relation equals degrees(e) except it also carries
-    # survivors peeled down to zero remaining edges — degrees() never
-    # lists those, so drop them for the identical contract.  The
-    # returned relation is checkpoint-backed, so the loop's remaining
-    # caches can be dropped.
-    if prev_marked is not None:
-        prev_marked.unpersist()
-    if e0 is not None:
-        e0.unpersist()
-    return deg.filter(F.col("deg") > 0)
+            prev_marked = marked
+        # the maintained relation equals degrees(e) except it also
+        # carries survivors peeled down to zero remaining edges —
+        # degrees() never lists those, so drop them for the identical
+        # contract.  The returned relation is checkpoint-backed, so the
+        # loop's remaining caches can be dropped.
+        return deg.filter(F.col("deg") > 0)
+    finally:
+        # also on a raise mid-loop: release every cache this call made
+        for own in (marked, prev_marked, e0):
+            if own is not None:
+                own.unpersist()

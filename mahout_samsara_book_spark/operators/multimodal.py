@@ -269,13 +269,6 @@ def _png_chunk(typ: bytes, data: bytes) -> bytes:
     )
 
 
-def _paeth_vec(left: np.ndarray, up: np.ndarray, ul: np.ndarray) -> np.ndarray:
-    """Vectorized Paeth predictor (PNG spec §9.4)."""
-    p = left + up - ul
-    pa, pb, pc = np.abs(p - left), np.abs(p - up), np.abs(p - ul)
-    return np.where((pa <= pb) & (pa <= pc), left, np.where(pb <= pc, up, ul))
-
-
 def _paeth_u8(left: np.ndarray, up: np.ndarray, ul: np.ndarray) -> np.ndarray:
     """Paeth over uint8 operands: the distance math runs in int16
     (p = a+b−c spans [−255, 510]) but the SELECTED value is returned

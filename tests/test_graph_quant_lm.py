@@ -279,6 +279,60 @@ def test_kcore_peel_cascade(spark):
     assert {r["node"]: r["deg"] for r in after3.collect()} == got2
 
 
+def test_kcore_peel_keeps_caller_cache_and_releases_its_own(
+    spark, monkeypatch
+):
+    """kcore_peel never evicts a relation its caller cached, and a
+    raise mid-loop releases every cache the call itself made.  The
+    degree relations' local checkpoints are left out of the count:
+    they are lineage cuts whose blocks Spark's ContextCleaner reclaims
+    once the relation is garbage, not caches the operator owns."""
+    from pyspark import StorageLevel
+
+    from mahout_samsara_book_spark.operators.graph import kcore_peel
+
+    pairs = [(1, 2), (2, 3), (1, 3), (3, 4), (4, 5)]
+    edges = _edges(spark, pairs).cache()
+    try:
+        got = {
+            r["node"]: r["deg"]
+            for r in kcore_peel(edges, k=2, rounds=2).collect()
+        }
+        assert got == {1: 2, 2: 2, 3: 2}
+        assert edges.is_cached
+        assert edges.storageLevel != StorageLevel.NONE
+    finally:
+        edges.unpersist(blocking=True)
+
+    def persistent_ids():
+        return {
+            rid
+            for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
+            if not rdd.rdd().isLocallyCheckpointed()
+        }
+
+    before = persistent_ids()
+    frame_cls = type(edges)
+    real = frame_cls.localCheckpoint
+    calls = []
+
+    def failing_second_round(self, *args, **kwargs):
+        # the first call checkpoints the initial degrees; the second
+        # runs round 0's degree job — which materializes the edge and
+        # marked caches — and then raises
+        out = real(self, *args, **kwargs)
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("injected failure mid-loop")
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", failing_second_round)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        kcore_peel(_edges(spark, pairs), k=2, rounds=3)
+    assert len(calls) == 2
+    assert persistent_ids() <= before
+
+
 def test_sliding_hll_tracks_exact(spark):
     from mahout_samsara_book_spark.streaming.events import (
         sliding_active_users,

@@ -559,3 +559,123 @@ def test_index_compact_preserves_probes_and_collects_garbage(
         map(tuple, incremental_dedup_persisted(probe, path).collect())
     )
     assert final == before
+
+
+
+def _parquet_files(root):
+    import glob
+
+    return sorted(glob.glob(root + "/**/*.parquet", recursive=True))
+
+
+def _index_docs(spark, ids, text_of=None):
+    """Docs whose texts share no shingle unless their text keys match
+    (``text_of`` maps a doc id to its text key; default: the id)."""
+    text_of = text_of or (lambda i: i)
+    return spark.createDataFrame(
+        [(i, " ".join(f"w{text_of(i)}x{j}" for j in range(6))) for i in ids],
+        "doc_id long, text string",
+    )
+
+
+def test_index_persist_writes_one_bucket_file_per_band(spark, tmp_path):
+    """The corpus build goes through the same batch writer as append
+    and compaction: buckets are repartitioned by band, so each band
+    directory holds exactly one file however many partitions the
+    build ran with."""
+    import os
+
+    from mahout_samsara_book_spark.operators.dedup import (
+        INDEX_CORPUS_BATCH,
+        dedup_index_persist,
+    )
+
+    path = str(tmp_path / "ddx")
+    dedup_index_persist(_index_docs(spark, range(1, 41)), path, bands=8)
+    band_dirs = sorted(
+        d for d in os.listdir(path + "/buckets") if d.startswith("band=")
+    )
+    assert band_dirs == [f"band={b}" for b in range(8)]
+    for d in band_dirs:
+        files = _parquet_files(f"{path}/buckets/{d}")
+        assert len(files) == 1, (d, files)
+        assert f"/batch_id={INDEX_CORPUS_BATCH}/" in files[0]
+
+
+def test_index_repersist_drops_appended_batches(spark, tmp_path):
+    """A re-persist overwrites: only the corpus batch survives, in the
+    manifest and on disk, and probes no longer see appended rows."""
+    import pytest
+
+    from mahout_samsara_book_spark.operators.dedup import (
+        INDEX_CORPUS_BATCH,
+        dedup_index_append,
+        dedup_index_persist,
+        incremental_dedup_persisted,
+        manifest_batch_ids,
+    )
+
+    path = str(tmp_path / "ddx")
+    corpus = _index_docs(spark, range(1, 11))
+    batch = _index_docs(spark, range(100, 104))
+    # copies of the batch's texts under fresh ids
+    probe = _index_docs(spark, range(200, 204), text_of=lambda i: i - 100)
+    dedup_index_persist(corpus, path)
+    dedup_index_append(batch, path, batch_id="b1")
+    with pytest.raises(RuntimeError, match="injected crash"):
+        dedup_index_append(
+            batch, path, batch_id="orphan", _crash_point="after_shingles"
+        )
+    assert sorted(manifest_batch_ids(spark, path)) == [
+        "b1", INDEX_CORPUS_BATCH
+    ]
+    assert not any(
+        r["keep"] for r in incremental_dedup_persisted(probe, path).collect()
+    )
+
+    dedup_index_persist(corpus, path)
+    assert manifest_batch_ids(spark, path) == [INDEX_CORPUS_BATCH]
+    files = _parquet_files(path + "/buckets") + _parquet_files(
+        path + "/shingles"
+    )
+    assert files
+    assert all(f"/batch_id={INDEX_CORPUS_BATCH}/" in f for f in files)
+    assert all(
+        r["keep"] for r in incremental_dedup_persisted(probe, path).collect()
+    )
+    # the corpus batch id marks an overwrite, so append refuses it
+    with pytest.raises(ValueError, match="reserved"):
+        dedup_index_append(batch, path, batch_id=INDEX_CORPUS_BATCH)
+
+
+def test_index_compact_discards_incomplete_manifest_next(spark, tmp_path):
+    """A crash while compaction writes ``manifest_next`` leaves it
+    without ``_SUCCESS``; the re-run discards it instead of swapping an
+    incomplete manifest in."""
+    import os
+
+    from mahout_samsara_book_spark.operators.dedup import (
+        dedup_index_compact,
+        dedup_index_persist,
+        incremental_dedup_persisted,
+        manifest_batch_ids,
+    )
+
+    path = str(tmp_path / "ddx")
+    dedup_index_persist(_index_docs(spark, range(1, 11)), path)
+    # 500 copies corpus doc 3; 501 is new
+    probe = _index_docs(spark, [500, 501], text_of={500: 3, 501: 0}.get)
+    before = sorted(
+        map(tuple, incremental_dedup_persisted(probe, path).collect())
+    )
+    assert [r[1] for r in before] == [False, True]
+    os.makedirs(path + "/manifest_next")
+    with open(path + "/manifest_next/.part-x.parquet.tmp", "w"):
+        pass
+    gen = dedup_index_compact(spark, path)
+    assert manifest_batch_ids(spark, path) == [gen]
+    assert not os.path.exists(path + "/manifest_next")
+    after = sorted(
+        map(tuple, incremental_dedup_persisted(probe, path).collect())
+    )
+    assert after == before
