@@ -98,13 +98,9 @@ def main() -> None:
     # warm, so the reference is the warm floor).
     DISK_REF_SEC = 0.48
 
-    import tempfile
+    from mahout_samsara_book_spark.tmpdirs import fresh_tmpdir
 
-    from mahout_samsara_book_spark.tmpdirs import register_tmpdir
-
-    disk_dir = register_tmpdir(
-        tempfile.gettempdir() + f"/spark_graft_benchdisk_{os.getpid()}"
-    )
+    disk_dir = fresh_tmpdir("benchdisk")
 
     def _disk_probe(reps: int = 3) -> float:
         from pyspark.sql import functions as F

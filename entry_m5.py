@@ -12,9 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mahout_samsara_book_spark.sources.tables import load_table
+from mahout_samsara_book_spark.sources.tables import load_table, staged_layout
 
-from mahout_samsara_book_spark.tmpdirs import register_tmpdir
+from mahout_samsara_book_spark.tmpdirs import fresh_tmpdir
 from mahout_samsara_book_spark.operators.hashing import (
     P31,
     affine_sql,
@@ -2255,37 +2255,16 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # round-8: persisted IVF index lifecycle
 # ------------------------------------------------------------------ #
 
-# build-once IVF index per (sf_dir, source fingerprint) — the
-# production index lifecycle: the serving path reloads the inverted
-# lists from parquet and never re-clusters/re-assigns (mirrors the
-# ORC/Q5 layout caches).  Round-9 (ADVICE r8): keyed by the embeddings
-# table's (bytes, mtime) fingerprint instead of id(sparkContext), so a
-# regenerated fixture or a CPython id reuse can't serve a stale index.
-_IVF_IDX: dict[tuple, str] = {}
-_IVF_IDX_SEQ = [0]
-
-
 def _ivf_index_path(spark: SparkSession, sf_dir: str, emb) -> str:
-    """Build-once persisted IVF index for ``sf_dir`` (see _IVF_IDX)."""
-    import os
-    import shutil
-    import tempfile
-
+    """Persisted IVF index over ``sf_dir``'s embeddings, built once:
+    the serving path reloads the inverted lists from parquet and never
+    re-clusters or re-assigns."""
     from mahout_samsara_book_spark.operators.similarity import ivf_persist
-    from mahout_samsara_book_spark.sources.tables import source_fingerprint
 
-    key = (sf_dir, source_fingerprint(sf_dir, "embeddings"))
-    path = _IVF_IDX.get(key)
-    if path is None or not os.path.exists(path + "/assign/_SUCCESS"):
-        _IVF_IDX_SEQ[0] += 1
-        path = register_tmpdir(
-            tempfile.gettempdir()
-            + f"/spark_graft_ivfidx_{os.getpid()}_{_IVF_IDX_SEQ[0]}"
-        )
-        shutil.rmtree(path, ignore_errors=True)
-        ivf_persist(emb, path, n_centers="auto", seed=IVF_SEED)
-        _IVF_IDX[key] = path
-    return path
+    return staged_layout(
+        "ivfidx", sf_dir, ("embeddings",),
+        lambda path: ivf_persist(emb, path, n_centers="auto", seed=IVF_SEED),
+    )
 
 
 def q_ann_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2710,11 +2689,9 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # round-9: persisted dedup index (crawl-ingest without re-minhashing)
 # ------------------------------------------------------------------ #
 
-# Staged dedup indexes, built once per (sf_dir, source fingerprint,
-# recipe) — same write-once lifecycle as _IVF_IDX / the ORC layout:
-# buckets + shingle sets are parquet an ingest batch PROBES, so
-# per-batch cost is batch-proportional instead of re-scanning the
-# corpus every time.  A recipe names the corpus slice persisted and
+# Staged dedup indexes, one per recipe: buckets + shingle sets are
+# parquet an ingest batch PROBES, so per-batch cost is
+# batch-proportional instead of re-scanning the corpus every time.  A recipe names the corpus slice persisted and
 # the batch appended after it (None: no batch):
 #   probe      every doc but the % 50 = 17 batch
 #              (dedup_incremental_persisted)
@@ -2727,24 +2704,7 @@ _DDX_RECIPES = {
     "pristine": ("doc_id % 10 = 3", None),
     "lifecycle": ("doc_id % 10 = 3", "doc_id % 50 = 17"),
 }
-_DDX_BUILT: dict[tuple, str] = {}
 _DDX_COPIES: dict[str, str] = {}
-_DDX_SEQ = [0]
-
-
-def _ddx_dir(tag: str) -> str:
-    """A fresh temp directory, removed at process exit."""
-    import os
-    import shutil
-    import tempfile
-
-    _DDX_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_ddx{tag}_{os.getpid()}_{_DDX_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 def _staged_index(
@@ -2761,19 +2721,14 @@ def _staged_index(
     first, so bench reps do not accumulate one index copy per
     invocation in /tmp (GBs at sf10); every such caller returns a
     checkpointed result, which that deletion cannot invalidate."""
-    import os
     import shutil
 
     from mahout_samsara_book_spark.operators.dedup import (
         dedup_index_append,
         dedup_index_persist,
     )
-    from mahout_samsara_book_spark.sources.tables import source_fingerprint
 
-    key = (sf_dir, source_fingerprint(sf_dir, "documents"), recipe)
-    path = _DDX_BUILT.get(key)
-    if path is None or not os.path.exists(path + "/manifest/_SUCCESS"):
-        path = _ddx_dir(recipe)
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
@@ -2782,13 +2737,14 @@ def _staged_index(
         dedup_index_persist(docs.filter(corpus_where), path, **params)
         if batch_where is not None:
             dedup_index_append(docs.filter(batch_where), path, **params)
-        _DDX_BUILT[key] = path
+
+    path = staged_layout(f"ddx{recipe}", sf_dir, ("documents",), build)
     if copy_for is None:
         return path
     prev = _DDX_COPIES.get(copy_for)
     if prev is not None:
         shutil.rmtree(prev, ignore_errors=True)
-    work = _DDX_COPIES[copy_for] = _ddx_dir(copy_for)
+    work = _DDX_COPIES[copy_for] = fresh_tmpdir(f"ddx{copy_for}")
     shutil.copytree(path, work + "/index")
     return work + "/index"
 
@@ -4553,45 +4509,25 @@ def oracles() -> dict[str, str]:  # noqa: F811 — extend the registry
 # so the streaming compose computes the identical snapshot answers).
 # ------------------------------------------------------------------ #
 
-_DDX_STRM_BATCHES: dict[tuple, str] = {}
-
-
 def _ddx_stream_batches(spark: SparkSession, sf_dir: str) -> str:
     """Write-once staging of the three lifecycle batches as one
-    parquet file each (b00/b01/b02, ascending mtimes pin the
-    FileStreamSource order) per (sf_dir, fingerprint)."""
-    import glob
-    import os
-    import shutil
+    parquet file each (b00/b01/b02, in stream order)."""
+    from mahout_samsara_book_spark.sources.formats import write_ordered_files
 
-    from mahout_samsara_book_spark.sources.tables import source_fingerprint
+    def build(path: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "text"
+        )
+        b1 = docs.filter(F.col("doc_id") % 50 == 17)
+        b2 = docs.filter(F.col("doc_id") % 50 == 29).unionByName(
+            b1.select((F.col("doc_id") + DDX_REKEY).alias("doc_id"), "text")
+        )
+        b3 = docs.filter(F.col("doc_id") % 50 == 29).select(
+            (F.col("doc_id") + DDX_REKEY2).alias("doc_id"), "text"
+        )
+        write_ordered_files([b1, b2, b3], path)
 
-    key = (sf_dir, source_fingerprint(sf_dir, "documents"))
-    path = _DDX_STRM_BATCHES.get(key)
-    if path is not None and os.path.exists(path + "/b02.parquet"):
-        return path
-    path = _ddx_dir("sb")
-    os.makedirs(path)
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "text"
-    )
-    b1 = docs.filter(F.col("doc_id") % 50 == 17)
-    b2 = docs.filter(F.col("doc_id") % 50 == 29).unionByName(
-        b1.select((F.col("doc_id") + DDX_REKEY).alias("doc_id"), "text")
-    )
-    b3 = docs.filter(F.col("doc_id") % 50 == 29).select(
-        (F.col("doc_id") + DDX_REKEY2).alias("doc_id"), "text"
-    )
-    for i, b in enumerate([b1, b2, b3]):
-        tmp = f"{path}/_w{i}"
-        b.coalesce(1).write.mode("overwrite").parquet(tmp)
-        (f,) = glob.glob(tmp + "/part-*.parquet")
-        dst = f"{path}/b{i:02d}.parquet"
-        shutil.move(f, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-    _DDX_STRM_BATCHES[key] = path
-    return path
+    return staged_layout("ddxsb", sf_dir, ("documents",), build)
 
 
 def q_ev_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

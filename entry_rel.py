@@ -7,10 +7,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mahout_samsara_book_spark.sources.tables import load_table
+from mahout_samsara_book_spark.sources.tables import load_table, staged_layout
 
 from mahout_samsara_book_spark.functions import relational as R
-from mahout_samsara_book_spark.tmpdirs import register_tmpdir
+from mahout_samsara_book_spark.tmpdirs import fresh_tmpdir
 
 _sci = None
 _sci_sql = None
@@ -1442,9 +1442,6 @@ QUERIES.update({"ev_stream_stateful": q_ev_stream_stateful})
 _LATE_ORACLES.update({"ev_stream_stateful": o_ev_stream_stateful})
 
 
-_PART_RT_SEQ = [0]
-
-
 def q_fmt_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-pruning proof in the gate: events written to a
     Hive-partitioned layout (``event_type=…/`` directories — the 100 TB
@@ -1454,13 +1451,7 @@ def q_fmt_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     planning time (PartitionFilters on the scan, asserted in
     tools/explain_audit.py) — and the oracle aggregates the ORIGINAL
     parquet with the same predicate, so a hash-match certifies the
-    partitioned write/read/prune edge loses nothing. Output dir is
-    pid-qualified + sequence-numbered (same concurrency contract as
-    fmt_bucketed_join)."""
-    import os
-    import shutil
-    import tempfile
-
+    partitioned write/read/prune edge loses nothing."""
     from mahout_samsara_book_spark.sources.formats import (
         read_partitioned,
         write_partitioned,
@@ -1468,12 +1459,7 @@ def q_fmt_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mahout_samsara_book_spark.sources.tables import load_table
     from mahout_samsara_book_spark.streaming.events import windowed_counts
 
-    _PART_RT_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_part_rt_{os.getpid()}_{_PART_RT_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_tmpdir("part_rt")
     ev = load_table(spark, sf_dir, "events")
     write_partitioned(ev, path, ["event_type"])
     back = read_partitioned(spark, path).filter(
@@ -1501,9 +1487,6 @@ QUERIES.update({"fmt_partitioned_prune": q_fmt_partitioned_prune})
 _LATE_ORACLES.update({"fmt_partitioned_prune": o_fmt_partitioned_prune})
 
 
-_CSV_RT_SEQ = [0]
-
-
 def q_fmt_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Landing-zone ingestion edge in the gate: events → CSV (header,
     explicit timestamp format) → read back with the EXPLICIT schema
@@ -1512,20 +1495,11 @@ def q_fmt_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, so a hash-match certifies the CSV write/read edge —
     including microsecond TIMESTAMP_NTZ fidelity through the text
     format — loses nothing."""
-    import os
-    import shutil
-    import tempfile
-
     from mahout_samsara_book_spark.sources.formats import read_csv, write_csv
     from mahout_samsara_book_spark.sources.tables import load_table
     from mahout_samsara_book_spark.streaming.events import windowed_counts
 
-    _CSV_RT_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_csv_rt_{os.getpid()}_{_CSV_RT_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_tmpdir("csv_rt")
     ev = load_table(spark, sf_dir, "events")
     write_csv(ev, path)
     back = read_csv(spark, path, ev.schema)
@@ -1546,10 +1520,6 @@ def q_fmt_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-Lines twin of fmt_csv_roundtrip — the other landing-zone
     format (full fidelity for nested types, pinned timestamp format,
     explicit schema on read)."""
-    import os
-    import shutil
-    import tempfile
-
     from mahout_samsara_book_spark.sources.formats import (
         read_jsonl,
         write_jsonl,
@@ -1557,12 +1527,7 @@ def q_fmt_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mahout_samsara_book_spark.sources.tables import load_table
     from mahout_samsara_book_spark.streaming.events import windowed_counts
 
-    _CSV_RT_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_jsonl_rt_{os.getpid()}_{_CSV_RT_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_tmpdir("jsonl_rt")
     ev = load_table(spark, sf_dir, "events")
     write_jsonl(ev, path)
     back = read_jsonl(spark, path, ev.schema)
@@ -1589,18 +1554,9 @@ def q_fmt_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the generation split analytically on the original
     parquet, so the hash-match certifies missing-column null-fill and
     cross-file schema unification."""
-    import os
-    import shutil
-    import tempfile
-
     from mahout_samsara_book_spark.sources.tables import load_table
 
-    _CSV_RT_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_merge_rt_{os.getpid()}_{_CSV_RT_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = fresh_tmpdir("merge_rt")
     ev = load_table(spark, sf_dir, "events")
     old_gen = ev.filter(F.col("event_id") % 2 == 0).drop("value")
     new_gen = ev.filter(F.col("event_id") % 2 == 1)
@@ -1719,18 +1675,8 @@ QUERIES.update({"rel_skyline": q_rel_skyline})
 _LATE_ORACLES.update({"rel_skyline": o_rel_skyline})
 
 
-_ORC_RT_SEQ = [0]
-# write-once ORC layout per (sf_dir, source fingerprint) — round-8,
-# VERDICT r7 item 8: re-invocations (bench reps, repeated driver calls)
-# measure the READ path; the write edge is still certified because the
-# first invocation in every process writes, and the oracle's hash-match
-# covers whichever invocation the driver graded.  Round-9 (ADVICE r8):
-# the key carries the SOURCE table's (bytes, mtime) fingerprint instead
-# of id(sparkContext) — a regenerated fixture at the same path, or a
-# CPython id reuse after the old context is collected, can no longer
-# serve a stale layout.  The write wall-seconds are recorded per key so
-# bench/SCALING can report the write edge alongside the warm read path.
-_ORC_LAYOUTS: dict[tuple, str] = {}
+# first-build write wall-seconds per (sf_dir, events fingerprint),
+# reported by bench.py as fmt_orc_write_sec beside the warm read path
 ORC_WRITE_SECS: dict[tuple, float] = {}
 
 
@@ -1743,39 +1689,24 @@ def q_fmt_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated invocations time the READ+aggregate path, not a redundant
     re-write (the write edge's wall-seconds are recorded in
     ``ORC_WRITE_SECS`` and surfaced by bench.py as ``fmt_orc_write_sec``
-    so the two are never conflated — ADVICE r8); the path is
-    pid-qualified so concurrent drivers never clobber each other, and
-    cached layouts are never overwritten so pending lazy reads stay
-    valid."""
-    import os
-    import shutil
-    import tempfile
+    so the two are never conflated — ADVICE r8)."""
     import time
 
     from mahout_samsara_book_spark.sources.formats import (
         read_orc,
         write_orc,
     )
-    from mahout_samsara_book_spark.sources.tables import (
-        load_table,
-        source_fingerprint,
-    )
+    from mahout_samsara_book_spark.sources.tables import source_fingerprint
     from mahout_samsara_book_spark.streaming.events import windowed_counts
 
-    key = (sf_dir, source_fingerprint(sf_dir, "events"))
-    path = _ORC_LAYOUTS.get(key)
-    if path is None or not os.path.exists(path + "/_SUCCESS"):
-        _ORC_RT_SEQ[0] += 1
-        path = register_tmpdir(
-            tempfile.gettempdir()
-            + f"/spark_graft_orc_rt_{os.getpid()}_{_ORC_RT_SEQ[0]}"
-        )
-        shutil.rmtree(path, ignore_errors=True)
+    def build(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         t0 = time.perf_counter()
         write_orc(ev, path)
+        key = (sf_dir, source_fingerprint(sf_dir, "events"))
         ORC_WRITE_SECS[key] = time.perf_counter() - t0
-        _ORC_LAYOUTS[key] = path
+
+    path = staged_layout("orc_rt", sf_dir, ("events",), build)
     back = read_orc(spark, path)
     out = windowed_counts(back, "1 hour")
     return out.select(
@@ -1790,9 +1721,6 @@ QUERIES.update({"fmt_orc_roundtrip": q_fmt_orc_roundtrip})
 _LATE_ORACLES.update({"fmt_orc_roundtrip": o_ev_windowed_counts})
 
 
-_BKT_SEQ = [0]
-
-
 def q_fmt_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-layout correctness in the gate (closes VERDICT r4
     'missing' item 4, previously pytest-only): lineitem + orders are
@@ -1805,11 +1733,8 @@ def q_fmt_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_bucketing.py); the oracle runs the same join over the
     ORIGINAL parquet, so a hash-match certifies the bucketed
     write/read/join edge loses nothing. Output DB is per-invocation
-    (sequence-numbered, like fmt_orc_roundtrip) so a pending lazy read
-    is never clobbered by a re-run."""
+    so a pending lazy read is never clobbered by a re-run."""
     import os
-    import shutil
-    import tempfile
 
     from mahout_samsara_book_spark.sources.bucketing import (
         bucketed_table,
@@ -1817,12 +1742,8 @@ def q_fmt_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from mahout_samsara_book_spark.sources.tables import load_table
 
-    _BKT_SEQ[0] += 1
-    # pid-qualified: two concurrent driver processes on one host must
-    # never rmtree/overwrite each other's table location (ADVICE r5)
-    db = f"spark_graft_bkt_{os.getpid()}_{_BKT_SEQ[0]}"
-    loc = register_tmpdir(tempfile.gettempdir() + f"/{db}")
-    shutil.rmtree(loc, ignore_errors=True)
+    loc = fresh_tmpdir("bkt")
+    db = os.path.basename(loc)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
@@ -1900,60 +1821,38 @@ QUERIES.update({"fmt_bucketed_join": q_fmt_bucketed_join})
 _LATE_ORACLES.update({"fmt_bucketed_join": o_fmt_bucketed_join})
 
 
-# write-once layout cache: a bucketed LAYOUT's semantic is write once,
-# query many — re-invocations of the Q5 chain in the same process (bench
-# reps, repeated driver calls) must measure the JOIN, not re-pay the
-# write. Keyed by (sf_dir, source fingerprints) — round-9 (ADVICE r8):
-# a regenerated fixture changes the fingerprint and forces a fresh
-# layout; session identity is covered by the catalog re-verification
-# below. The db name stays pid-qualified so concurrent driver processes
-# never clobber each other, and the cached tables are never overwritten
-# so pending lazy reads stay valid.
-_Q5B_LAYOUTS: dict[tuple, str] = {}
-
-
 def _q5_bucketed_layout(spark: SparkSession, sf_dir: str) -> str:
+    """Name of the database holding the Q5 tables bucketed by their
+    join keys, written once so re-invocations measure the join, not
+    the write.  The layout name carries the SparkContext's
+    application id: the tables live in the session catalog, and an
+    in-memory catalog does not survive a SparkContext restart."""
     import os
-    import shutil
-    import tempfile
+    import re
 
     from mahout_samsara_book_spark.sources.bucketing import write_bucketed
-    from mahout_samsara_book_spark.sources.tables import (
-        load_table,
-        source_fingerprint,
-    )
 
-    key = (
-        sf_dir,
-        source_fingerprint(sf_dir, "lineitem"),
-        source_fingerprint(sf_dir, "orders"),
-        source_fingerprint(sf_dir, "customer"),
+    def build(loc: str) -> None:
+        db = os.path.basename(loc)
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_extendedprice", "l_discount"
+        )
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey"
+        )
+        cust = load_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_nationkey"
+        )
+        write_bucketed(li, f"{db}.lineitem_b", ["l_orderkey"], 8)
+        write_bucketed(orders, f"{db}.orders_b", ["o_orderkey"], 8)
+        write_bucketed(cust, f"{db}.customer_b", ["c_custkey"], 8)
+
+    app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
+    loc = staged_layout(
+        f"q5b_{app}", sf_dir, ("lineitem", "orders", "customer"), build
     )
-    db = _Q5B_LAYOUTS.get(key)
-    # re-verify through the catalog: an id() can be reused after a
-    # session restart in the same process, where the cached name would
-    # point at tables the fresh catalog no longer knows
-    if db is not None and spark.catalog.tableExists(f"{db}.lineitem_b"):
-        return db
-    _BKT_SEQ[0] += 1
-    db = f"spark_graft_q5b_{os.getpid()}_{_BKT_SEQ[0]}"
-    loc = register_tmpdir(tempfile.gettempdir() + f"/{db}")
-    shutil.rmtree(loc, ignore_errors=True)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_extendedprice", "l_discount"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    write_bucketed(li, f"{db}.lineitem_b", ["l_orderkey"], 8)
-    write_bucketed(orders, f"{db}.orders_b", ["o_orderkey"], 8)
-    write_bucketed(cust, f"{db}.customer_b", ["c_custkey"], 8)
-    _Q5B_LAYOUTS[key] = db
-    return db
+    return os.path.basename(loc)
 
 
 def q_rel_revenue_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:

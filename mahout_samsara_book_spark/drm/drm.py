@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from mahout_samsara_book_spark.cache import track
+
 KEY = "row_id"
 FEAT = "features"
 
@@ -297,7 +299,7 @@ class Drm:
             .sortWithinPartitions(*order)
             .withColumn("_pid", F.spark_partition_id())
         )
-        sorted_df = sorted_df.persist(StorageLevel.MEMORY_AND_DISK)
+        sorted_df = track(sorted_df)
         counts = {
             r["_pid"]: r["cnt"]
             for r in sorted_df.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()

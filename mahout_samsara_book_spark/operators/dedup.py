@@ -661,16 +661,14 @@ def dup_clusters(
     edges0 = pairs.select(
         F.col(a_col).alias("src"), F.col(b_col).alias("dst")
     ).persist()
-    n_edges = edges0.count()
-    if n_edges <= limit:
-        out = _clusters_unionfind(edges0)
+    try:
+        if edges0.count() <= limit:
+            return _clusters_unionfind(edges0)
+        return connected_components_lsls(
+            edges0, a_col="src", b_col="dst", max_iter=max_iter
+        )
+    finally:
         edges0.unpersist()
-        return out
-    out = connected_components_lsls(
-        edges0, a_col="src", b_col="dst", max_iter=max_iter
-    )
-    edges0.unpersist()
-    return out
 
 
 # Edge graphs at or below this ride the driver union-find fast path

@@ -118,6 +118,25 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def write_ordered_files(parts: list[DataFrame], path: str) -> None:
+    """Write each of ``parts`` as one parquet file ``<path>/bNN.parquet``
+    with ascending mtimes: a file stream source reading ``path`` with
+    ``maxFilesPerTrigger=1`` delivers them as micro-batches in list
+    order (FileStreamSource orders new files by modification time)."""
+    import glob
+    import os
+    import shutil
+
+    for i, p in enumerate(parts):
+        tmp = f"{path}/_w{i}"
+        p.coalesce(1).write.mode("overwrite").parquet(tmp)
+        (f,) = glob.glob(tmp + "/part-*.parquet")
+        dst = f"{path}/b{i:02d}.parquet"
+        shutil.move(f, dst)
+        shutil.rmtree(tmp)
+        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).orc(path)
 

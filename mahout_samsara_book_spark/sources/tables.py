@@ -10,11 +10,13 @@ as two-column parquet tables per SURVEY §1.1).
 from __future__ import annotations
 
 import itertools
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mahout_samsara_book_spark.drm.drm import Drm
+from mahout_samsara_book_spark.tmpdirs import fresh_tmpdir
 
 TABLES = (
     "region",
@@ -171,6 +173,34 @@ def source_fingerprint(sf_dir: str, name: str) -> tuple:
 # callers; the counter keeps tokens unique if paths ever alias
 _FP_FRESH = itertools.count()
 _FP_FRESH_BY_PATH: dict[str, int] = {}
+
+
+_STAGED: dict[tuple, str] = {}
+STAGED_MARKER = "_STAGED"
+
+
+def staged_layout(
+    name: str,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    build: Callable[[str], None],
+) -> str:
+    """Path of the write-once layout ``name`` derived from ``sf_dir``'s
+    ``tables``: ``build(path)`` fills a fresh temp dir once per
+    (``name``, ``sf_dir``, fingerprints of ``tables``) and later calls
+    reuse it while its marker exists (the staging rule in
+    :mod:`mahout_samsara_book_spark.tmpdirs`)."""
+    import os
+
+    key = (name, sf_dir, *(source_fingerprint(sf_dir, t) for t in tables))
+    path = _STAGED.get(key)
+    if path is not None and os.path.exists(f"{path}/{STAGED_MARKER}"):
+        return path
+    path = fresh_tmpdir(name)
+    build(path)
+    open(f"{path}/{STAGED_MARKER}", "w").close()
+    _STAGED[key] = path
+    return path
 
 
 def lineitem_key() -> F.Column:

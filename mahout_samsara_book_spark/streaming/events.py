@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mahout_samsara_book_spark.sources.tables import load_table, ts_us
-from mahout_samsara_book_spark.tmpdirs import register_tmpdir
+from mahout_samsara_book_spark.tmpdirs import fresh_tmpdir
 
 US_PER_SEC = 1_000_000
 
@@ -670,9 +670,8 @@ def run_stream_dedup(spark, sf_dir: str, watermark: str = "30 minutes") -> DataF
     watermark), the property that keeps this shape runnable forever on
     an unbounded stream."""
     import shutil
-    import tempfile
 
-    src = register_tmpdir(tempfile.mkdtemp(prefix="sg_dedup_src_"))
+    src = fresh_tmpdir("dedup_src")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/a.parquet")
     shutil.copy(f"{sf_dir}/events.parquet", f"{src}/b.parquet")
     batch_schema = load_table(spark, sf_dir, "events").schema

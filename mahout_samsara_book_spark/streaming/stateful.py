@@ -16,7 +16,6 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from mahout_samsara_book_spark.sources.tables import load_table
-from mahout_samsara_book_spark.tmpdirs import register_tmpdir
 
 OUTPUT_SCHEMA = "event_type string, n long, total_value double"
 STATE_SCHEMA = "n long, total_value double"
@@ -659,8 +658,6 @@ def _sentinel_row(spark, ident: int, etype: str, t_us: int):
     )
 
 
-_ASOF_WM_STAGING: dict[tuple, str] = {}
-_ASOF_WM_SEQ = [0]
 ASOF_WM_SENTINEL_US = 7_200_000_000  # 2 h past max event time
 ASOF_WM_SLICES = 2
 
@@ -683,72 +680,49 @@ def _asof_wm_staging(spark, sf_dir: str) -> str:
     inverts the fixture's geometry — most keys idle per micro-batch
     (only arriving/flushing users are touched), so batch cadence is
     NOT a per-key tax there, and state size becomes the real dial."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from mahout_samsara_book_spark.sources.tables import (
-        load_table,
-        source_fingerprint,
-        ts_us,
-    )
+    from mahout_samsara_book_spark.sources.formats import write_ordered_files
+    from mahout_samsara_book_spark.sources.tables import staged_layout, ts_us
     from pyspark.sql import functions as F
 
-    key = (sf_dir, source_fingerprint(sf_dir, "events"))
-    path = _ASOF_WM_STAGING.get(key)
-    last = f"/b{ASOF_WM_SLICES:02d}.parquet"
-    if path is not None and os.path.exists(path + last):
-        return path
-    _ASOF_WM_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_asofwm_{os.getpid()}_{_ASOF_WM_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    ev = load_table(spark, sf_dir, "events")
-    src = (
-        ev.filter(F.col("event_type").isin("click", "purchase"))
-        .withColumn("t_us", ts_us(ev))
-        .select("event_id", "user_id", "event_type", "t_us")
-    )
-    qs = [i / ASOF_WM_SLICES for i in range(1, ASOF_WM_SLICES)]
-    row = src.agg(
-        *[
-            F.expr(
-                f"percentile_cont({q}) WITHIN GROUP (ORDER BY t_us)"
-            ).alias(f"q{i}")
-            for i, q in enumerate(qs)
-        ],
-        F.max("t_us").alias("hi"),
-    ).first()
-    cuts = [int(row[f"q{i}"]) for i in range(len(qs))]
-    hi = int(row["hi"])
-    bounds = [None, *cuts, None]
-    parts = []
-    for i in range(ASOF_WM_SLICES):
-        lo_b, hi_b = bounds[i], bounds[i + 1]
-        p = src
-        if lo_b is not None:
-            p = p.filter(F.col("t_us") > lo_b)
-        if hi_b is not None:
-            p = p.filter(F.col("t_us") <= hi_b)
-        parts.append(p)
-    # JVM-literal one-row plan, not createDataFrame: the local-
-    # relation WRITE path measured 6-9 s per file on local[32] (round
-    # 12, dedup._manifest_commit note) — pure lit() rows write in ~0.2 s
-    parts.append(_sentinel_row(spark, -1, "click", hi + ASOF_WM_SENTINEL_US))
-    for i, p in enumerate(parts):
-        tmp = f"{path}/_w{i}"
-        p.coalesce(1).write.mode("overwrite").parquet(tmp)
-        (f,) = glob.glob(tmp + "/part-*.parquet")
-        dst = f"{path}/b{i:02d}.parquet"
-        shutil.move(f, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-    _ASOF_WM_STAGING[key] = path
-    return path
+    def build(path: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        src = (
+            ev.filter(F.col("event_type").isin("click", "purchase"))
+            .withColumn("t_us", ts_us(ev))
+            .select("event_id", "user_id", "event_type", "t_us")
+        )
+        qs = [i / ASOF_WM_SLICES for i in range(1, ASOF_WM_SLICES)]
+        row = src.agg(
+            *[
+                F.expr(
+                    f"percentile_cont({q}) WITHIN GROUP (ORDER BY t_us)"
+                ).alias(f"q{i}")
+                for i, q in enumerate(qs)
+            ],
+            F.max("t_us").alias("hi"),
+        ).first()
+        cuts = [int(row[f"q{i}"]) for i in range(len(qs))]
+        hi = int(row["hi"])
+        bounds = [None, *cuts, None]
+        parts = []
+        for i in range(ASOF_WM_SLICES):
+            lo_b, hi_b = bounds[i], bounds[i + 1]
+            p = src
+            if lo_b is not None:
+                p = p.filter(F.col("t_us") > lo_b)
+            if hi_b is not None:
+                p = p.filter(F.col("t_us") <= hi_b)
+            parts.append(p)
+        # JVM-literal one-row plan, not createDataFrame: the local-
+        # relation WRITE path measured 6-9 s per file on local[32]
+        # (round 12, dedup._manifest_commit note) — pure lit() rows
+        # write in ~0.2 s
+        parts.append(
+            _sentinel_row(spark, -1, "click", hi + ASOF_WM_SENTINEL_US)
+        )
+        write_ordered_files(parts, path)
+
+    return staged_layout("asofwm", sf_dir, ("events",), build)
 
 
 # ------------------------------------------------------------------ #
@@ -768,9 +742,6 @@ ASOF_TTL_A1 = ASOF_TTL_T0 + ASOF_TTL_US + 2 * ASOF_TTL_DELAY_US
 ASOF_TTL_T1 = ASOF_TTL_A1 + 1_000_000    # keep-alive click (survivors)
 ASOF_TTL_T2 = ASOF_TTL_T1 + 3_600_000_000  # purchase (all users)
 ASOF_TTL_HB = ASOF_TTL_T2 + 7_200_000_000  # final heartbeat
-
-_ASOF_TTL_STAGING: dict[tuple, str] = {}
-_ASOF_TTL_SEQ = [0]
 
 
 def _asof_ttl_staging(spark, sf_dir: str) -> str:
@@ -798,63 +769,39 @@ def _asof_ttl_staging(spark, sf_dir: str) -> str:
     the TTL dropped it, which is precisely the documented trade (a
     no-TTL run would attribute BOTH classes to their T0 clicks, so the
     graded hash genuinely separates the machines)."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
-    from mahout_samsara_book_spark.sources.tables import (
-        load_table,
-        source_fingerprint,
-    )
+    from mahout_samsara_book_spark.sources.formats import write_ordered_files
+    from mahout_samsara_book_spark.sources.tables import staged_layout
     from pyspark.sql import functions as F
 
-    key = (sf_dir, source_fingerprint(sf_dir, "events"))
-    path = _ASOF_TTL_STAGING.get(key)
-    if path is not None and os.path.exists(path + "/b04.parquet"):
-        return path
-    _ASOF_TTL_SEQ[0] += 1
-    path = register_tmpdir(
-        tempfile.gettempdir()
-        + f"/spark_graft_asofttl_{os.getpid()}_{_ASOF_TTL_SEQ[0]}"
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    users = (
-        load_table(spark, sf_dir, "events")
-        .select("user_id")
-        .filter(F.col("user_id") % 10 < 2)
-        .distinct()
-    )
-
-    def synth(df, eid_off: int, etype: str, t: int):
-        return df.select(
-            (F.col("user_id") * 8 + eid_off).alias("event_id"),
-            "user_id",
-            F.lit(etype).alias("event_type"),
-            F.lit(t).cast("long").alias("t_us"),
+    def build(path: str) -> None:
+        users = (
+            load_table(spark, sf_dir, "events")
+            .select("user_id")
+            .filter(F.col("user_id") % 10 < 2)
+            .distinct()
         )
 
-    parts = [
-        synth(users, 1, "click", ASOF_TTL_T0),
-        _sentinel_row(spark, -2, "click", ASOF_TTL_A1),
-        synth(
-            users.filter(F.col("user_id") % 10 == 0),
-            2, "click", ASOF_TTL_T1,
-        ),
-        synth(users, 3, "purchase", ASOF_TTL_T2),
-        _sentinel_row(spark, -1, "click", ASOF_TTL_HB),
-    ]
-    for i, p in enumerate(parts):
-        tmp = f"{path}/_w{i}"
-        p.coalesce(1).write.mode("overwrite").parquet(tmp)
-        (f,) = glob.glob(tmp + "/part-*.parquet")
-        dst = f"{path}/b{i:02d}.parquet"
-        shutil.move(f, dst)
-        shutil.rmtree(tmp)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-    _ASOF_TTL_STAGING[key] = path
-    return path
+        def synth(df, eid_off: int, etype: str, t: int):
+            return df.select(
+                (F.col("user_id") * 8 + eid_off).alias("event_id"),
+                "user_id",
+                F.lit(etype).alias("event_type"),
+                F.lit(t).cast("long").alias("t_us"),
+            )
+
+        parts = [
+            synth(users, 1, "click", ASOF_TTL_T0),
+            _sentinel_row(spark, -2, "click", ASOF_TTL_A1),
+            synth(
+                users.filter(F.col("user_id") % 10 == 0),
+                2, "click", ASOF_TTL_T1,
+            ),
+            synth(users, 3, "purchase", ASOF_TTL_T2),
+            _sentinel_row(spark, -1, "click", ASOF_TTL_HB),
+        ]
+        write_ordered_files(parts, path)
+
+    return staged_layout("asofttl", sf_dir, ("events",), build)
 
 
 def run_stream_asof_ttl(spark, sf_dir: str) -> DataFrame:

@@ -1,33 +1,55 @@
-"""Process-exit cleanup registry for fixture temp directories
-(VERDICT r11 item 7).
+"""The one staging rule for everything a query writes to local disk
+and reads back: persisted indexes, stream batch layouts, format
+round-trip tables and bucketed databases.
 
-Several graded fixtures stage state under ``tempfile.gettempdir()`` —
-persisted dedup indexes, lifecycle working copies, streaming batch
-layouts, format-roundtrip tables.  Each is keyed per (pid, sequence)
-so concurrent processes never collide, but that also means every
-process (bench, the oracle gate, pytest) used to leave its own copies
-behind at exit — bounded and small at sf0.1, GBs per process at sf10.
-``register_tmpdir`` records every such path; one ``atexit`` hook
-removes them all when the process ends.  Removal is best-effort
-(``ignore_errors``): at atexit time the paths are pure disk state —
-any Spark plan that read them has either executed or never will.
+- **Fresh dir.** :func:`fresh_tmpdir` hands out
+  ``<tmp>/spark_graft_<tag>_<pid>_<seq>``, emptied and created.  The
+  pid keeps concurrent processes apart; the sequence keeps a pending
+  lazy read of an earlier dir valid while a later call writes its own.
+- **Key.** A layout derived from source tables is built once per
+  (layout name, ``sf_dir``, source fingerprints) by
+  ``sources.tables.staged_layout``; a regenerated fixture changes the
+  fingerprint and so gets a fresh layout.
+- **Marker.** ``staged_layout`` writes a ``_``-prefixed marker after
+  the build returns and reuses a layout only while the marker exists,
+  so a build that raised or a layout deleted under it is rebuilt.
+  Spark's file index hides ``_``-prefixed names, so readers of the dir
+  never see the marker.
+- **Purge.** Every path is registered with :func:`register_tmpdir`;
+  one ``atexit`` hook (and a SIGTERM handler) removes them all when the
+  process ends.  Removal is best-effort (``ignore_errors``): at exit
+  the paths are pure disk state — any Spark plan that read them has
+  either executed or never will.
 """
 
 from __future__ import annotations
 
 import atexit
+import itertools
 import os
 import shutil
 import signal
+import tempfile
 import threading
 
 _DIRS: set[str] = set()
+_SEQ = itertools.count(1)
 
 
 def register_tmpdir(path: str) -> str:
     """Mark ``path`` for recursive removal at process exit; returns it
     unchanged so creation sites can wrap in place."""
     _DIRS.add(path)
+    return path
+
+
+def fresh_tmpdir(tag: str) -> str:
+    """A new, empty directory ``<tmp>/spark_graft_<tag>_<pid>_<seq>``,
+    registered for removal at process exit."""
+    name = f"spark_graft_{tag}_{os.getpid()}_{next(_SEQ)}"
+    path = register_tmpdir(tempfile.gettempdir() + "/" + name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
     return path
 
 

@@ -66,10 +66,14 @@ def test_sample_quantiles_duplicate_keys_deterministic(spark):
 
 
 def test_tracked_caches_released_across_queries(spark, docs_fixture):
-    """containment_dedup / pipeline_funnel / triangle_counts persist
-    intermediates they cannot unpersist themselves; after consumption +
-    release_tracked() the session must hold no more cached RDDs than it
-    started with (VERDICT r4 'no persisted-RDD growth' criterion)."""
+    """containment_dedup / pipeline_funnel / triangle_counts /
+    train_text_nb / Drm.reindex persist intermediates they cannot
+    unpersist themselves; after consumption + release_tracked() the
+    session must hold no more cached RDDs than it started with
+    (VERDICT r4 'no persisted-RDD growth' criterion)."""
+    from mahout_samsara_book_spark import cache as _cache
+    from mahout_samsara_book_spark.algorithms.naive_bayes import train_text_nb
+    from mahout_samsara_book_spark.drm.drm import Drm
     from mahout_samsara_book_spark.operators.dedup import containment_dedup
     from mahout_samsara_book_spark.operators.graph import triangle_counts
     from mahout_samsara_book_spark.operators.pipeline import pipeline_funnel
@@ -96,6 +100,20 @@ def test_tracked_caches_released_across_queries(spark, docs_fixture):
     triangle_counts(edges).count()
     out = pipeline_funnel(docs_fixture)
     out.count()
+    n_before = len(_cache._TRACKED)
+    train_text_nb(docs_fixture, label_col="lang").count()
+    # counts + class_term
+    assert len(_cache._TRACKED) == n_before + 2
+    drm = Drm(
+        spark.createDataFrame(
+            [(5, [1.0, 2.0]), (9, [3.0, 4.0]), (7, [5.0, 6.0])],
+            "row_id long, features array<double>",
+        ),
+        ncol=2,
+    )
+    drm.reindex().df.count()
+    # sorted_df
+    assert len(_cache._TRACKED) == n_before + 3
     # the GLOBAL persistent-RDD count is unstable under full-suite
     # ordering: an earlier test may have cached an identical plan
     # (CacheManager dedups by canonicalized plan) and the async
@@ -103,12 +121,8 @@ def test_tracked_caches_released_across_queries(spark, docs_fixture):
     # two measurements — both directions observed in CI. The
     # deterministic mid-state signal is the cache REGISTRY itself; the
     # load-bearing assertions are the release ones below.
-    from mahout_samsara_book_spark import cache as _cache_mid
-
-    assert len(_cache_mid._TRACKED) > 0
+    assert len(_cache._TRACKED) > 0
     n_mid = cached_count()
-
-    from mahout_samsara_book_spark import cache as _cache
 
     tracked = list(_cache._TRACKED)
     released = release_tracked(blocking=True)
@@ -126,6 +140,34 @@ def test_tracked_caches_released_across_queries(spark, docs_fixture):
     # absolute-baseline comparisons flaky.
     del out
     assert cached_count() < n_mid
+
+
+@pytest.mark.parametrize(
+    "solver, limit",
+    [("_clusters_unionfind", None), ("connected_components_lsls", 0)],
+)
+def test_dup_clusters_unpersists_edges_when_solver_raises(
+    spark, monkeypatch, solver, limit
+):
+    """A raising solver (union-find fast path or the LSLS big-graph
+    path) still releases dup_clusters' edge cache."""
+    from mahout_samsara_book_spark.operators import dedup
+
+    seen = []
+
+    def boom(edges, *args, **kwargs):
+        seen.append(edges)
+        raise RuntimeError("solver failed")
+
+    monkeypatch.setattr(dedup, solver, boom)
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (5, 6)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(RuntimeError, match="solver failed"):
+        dedup.dup_clusters(pairs, small_graph_max_edges=limit)
+    (edges0,) = seen
+    lvl = edges0.storageLevel
+    assert not (lvl.useMemory or lvl.useDisk)
 
 
 @pytest.fixture

@@ -27,6 +27,40 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns), ignore_index=True)
 
 
+def check_one(spark, con, sf_dir: str, name: str, fn, oracle: str | None) -> bool:
+    """Run query ``name`` on Spark and its oracle SQL on DuckDB, print
+    one result line, and return whether it passed."""
+    t0 = time.perf_counter()
+    try:
+        got = fn(spark, sf_dir).toPandas()
+    except Exception as exc:  # noqa: BLE001
+        print(f"FAIL {name}: spark query raised: {exc}")
+        return False
+    dt = time.perf_counter() - t0
+    if oracle is None:
+        print(f"OK?  {name}: rows={len(got)} ({dt:.1f}s) [no oracle — rows-only]")
+        return True
+    try:
+        want = con.execute(oracle).fetchdf()
+    except Exception as exc:  # noqa: BLE001
+        print(f"FAIL {name}: oracle SQL raised: {exc}")
+        return False
+    g, w = normalize(got), normalize(want)
+    if list(g.columns) != list(w.columns):
+        print(f"FAIL {name}: columns {list(g.columns)} vs {list(w.columns)}")
+        return False
+    if len(g) != len(w):
+        print(f"FAIL {name}: rows {len(g)} vs {len(w)}")
+        return False
+    if not g.equals(w.astype(g.dtypes.to_dict())):
+        diff = (g != w).any(axis=1)
+        print(f"FAIL {name}: {int(diff.sum())} mismatched rows, first:")
+        print(pd.concat([g[diff].head(3), w[diff].head(3)]))
+        return False
+    print(f"OK   {name}: rows={len(g)} hash-match ({dt:.1f}s)")
+    return True
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -43,39 +77,12 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.perf_counter()
+        # every path, passing or not, drops the query's tracked caches
         try:
-            got = fn(spark, sf_dir).toPandas()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL {name}: spark query raised: {exc}")
-            failures += 1
+            ok = check_one(spark, con, sf_dir, name, fn, oracles.get(name))
+        finally:
             release_tracked()
-            continue
-        dt = time.perf_counter() - t0
-        if name not in oracles:
-            print(f"OK?  {name}: rows={len(got)} ({dt:.1f}s) [no oracle — rows-only]")
-            continue
-        try:
-            want = con.execute(oracles[name]).fetchdf()
-        except Exception as exc:  # noqa: BLE001
-            print(f"FAIL {name}: oracle SQL raised: {exc}")
-            failures += 1
-            continue
-        g, w = normalize(got), normalize(want)
-        if list(g.columns) != list(w.columns):
-            print(f"FAIL {name}: columns {list(g.columns)} vs {list(w.columns)}")
-            failures += 1
-        elif len(g) != len(w):
-            print(f"FAIL {name}: rows {len(g)} vs {len(w)}")
-            failures += 1
-        elif not g.equals(w.astype(g.dtypes.to_dict())):
-            diff = (g != w).any(axis=1)
-            print(f"FAIL {name}: {int(diff.sum())} mismatched rows, first:")
-            print(pd.concat([g[diff].head(3), w[diff].head(3)]))
-            failures += 1
-        else:
-            print(f"OK   {name}: rows={len(g)} hash-match ({dt:.1f}s)")
-        release_tracked()
+        failures += not ok
     spark.stop()
     return 1 if failures else 0
 
